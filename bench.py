@@ -632,6 +632,24 @@ def _bw_burn(dur):
     return k
 
 
+def load_qualified_pair(path: str) -> dict | None:
+    """The persisted qualified scaling pair, or None when the file is
+    missing, unreadable, or not of the shape {"pair": {"efficiency":
+    <number>, ...}} — a malformed record is discarded, never fatal."""
+    if not os.path.exists(path):
+        return None
+    try:
+        with open(path) as f:
+            qualified = json.load(f)
+    except (OSError, json.JSONDecodeError):
+        return None
+    pair = qualified.get("pair") if isinstance(qualified, dict) else None
+    eff = pair.get("efficiency") if isinstance(pair, dict) else None
+    if not isinstance(eff, (int, float)) or isinstance(eff, bool):
+        return None
+    return qualified
+
+
 def main() -> None:
     t_all = time.time()
 
@@ -850,14 +868,7 @@ def main() -> None:
     # in SCALING_HUNT.jsonl. When this run's own window is healthy and
     # at least as good, the live pair stands; otherwise the qualified
     # pair (clearly labeled with its provenance) carries the clause.
-    qualified = None
-    qual_path = os.path.join(REPO, "SCALING_QUALIFIED.json")
-    if os.path.exists(qual_path):
-        try:
-            with open(qual_path) as f:
-                qualified = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            qualified = None
+    qualified = load_qualified_pair(os.path.join(REPO, "SCALING_QUALIFIED.json"))
     evidence_val, evidence_src, evidence_gated = (
         efficiency, "live_pair", bw_gate_passed
     )
@@ -867,7 +878,7 @@ def main() -> None:
             evidence_val = q_eff
             evidence_src = (
                 "qualified_pair (scripts/scaling_hunt.py, "
-                + qualified["pair"].get("iso", "")
+                + str(qualified["pair"].get("iso", ""))
                 + ", gate " + str(qualified["pair"].get("pre_probes"))
                 + " post " + str(qualified["pair"].get("post_probe")) + ")"
             )

@@ -199,3 +199,78 @@ def test_upsert_refuses_seq_op_columns(spark, tmp_path):
     bad = ch(spark, [ins(1, "a", "f.py", "x")])  # carries seq/op already
     with pytest.raises(ValueError, match="seq/op are"):
         t.upsert(bad)
+
+
+def test_mor_resolution_keeps_nullable_long_precision(spark, tmp_path):
+    """A nullable bigint above 2^53 must survive per-bucket MoR
+    resolution exactly (a float64 detour would round 2^53+1 to 2^53)."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("k", T.StringType()), T.StructField("n", T.LongType()),
+    ])
+    t = LakeTable.create(spark, str(tmp_path / "t"), schema, ["k"], num_buckets=1)
+    big = 2**53 + 1
+
+    def rows(seq, *kn):
+        return spark.createDataFrame(
+            [(seq, "insert", k, n) for k, n in kn], "seq long, op string, k string, n long"
+        )
+
+    t.merge(rows(1, ("a", big), ("b", None)), epoch=0)
+    t.merge(rows(2, ("c", -big)), epoch=1, mode="mor")
+    assert t.delta_rels(), "the bucket must carry a pending delta"
+    got = {r["k"]: r["n"] for r in read_lake(spark, t.path).collect()}
+    assert got == {"a": big, "b": None, "c": -big}
+
+
+def _pq(tmp_path, name, **cols):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = str(tmp_path / f"{name}.parquet")
+    pq.write_table(pa.table(cols), p)
+    return p
+
+
+def test_resolve_files_lww_in_arrow(tmp_path):
+    """The shared resolver on hand-written files: highest seq wins, the
+    base wins seq ties, tied delta copies collapse, null keys group."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from wrangler_spark.lake.resolve import resolve_files
+
+    schema = T.StructType([T.StructField("k", T.StringType()), T.StructField("v", T.StringType())])
+    base = _pq(tmp_path, "base", k=["a", "b", "c", None], v=["a0", "b0", "c0", "n0"],
+               __seq=pa.array([5, 5, 5, 5], pa.int64()), __deleted=[False] * 4)
+    d1 = _pq(tmp_path, "d1", k=["a", "b", "c", "e", None], v=["a1", "b1", "c1", "e1", "n1"],
+             __seq=pa.array([4, 5, 9, 9, 6], pa.int64()), __deleted=[False] * 5)
+    d2 = _pq(tmp_path, "d2", k=["c", "e"], v=["c1", None],
+             __seq=pa.array([9, 7], pa.int64()), __deleted=[False, True])
+    out = resolve_files([base], [d1, d2], schema, {}, ["k"])
+    got = {r["k"]: (r["v"], r["__seq"]) for r in out.to_pylist()}
+    assert out.num_rows == 5
+    assert got == {"a": ("a0", 5), "b": ("b0", 5), "c": ("c1", 9), "e": ("e1", 9),
+                   None: ("n1", 6)}
+    # key pushdown reads only the pinned keys
+    pinned = resolve_files([base], [d1, d2], schema, {}, ["k"], key_values={"k": ["c", "zz"]})
+    assert pinned.to_pylist() == [{"k": "c", "v": "c1", "__seq": 9, "__deleted": False}]
+
+
+def test_resolve_files_pushdown_on_narrower_stored_type(tmp_path):
+    """A file written before a key widened to bigint stores int32; a
+    literal beyond int32 cannot be in it and reads no rows there."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from wrangler_spark.lake.resolve import resolve_files
+
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    old = _pq(tmp_path, "old", k=pa.array([1, 2], pa.int32()),
+              __seq=pa.array([1, 1], pa.int64()), __deleted=[False, False])
+    new = _pq(tmp_path, "new", k=pa.array([2**40], pa.int64()),
+              __seq=pa.array([2], pa.int64()), __deleted=[False])
+    out = resolve_files([old, new], [], schema, {}, ["k"], key_values={"k": [2, 2**40]})
+    assert sorted(out.column("k").to_pylist()) == [2, 2**40]
+    assert out.schema.field("k").type == pa.int64()

@@ -107,6 +107,21 @@ def test_create_and_flatten_record(spark, df):
     assert "rec_name" in back.columns and "rec_state" in back.columns
 
 
+def test_set_type_decimal_to_bytes_minimal_length(spark):
+    """Bytes.toBytes(BigDecimal): 4-byte scale + BigInteger.toByteArray,
+    the minimal two's complement — −128 is one byte (0x80), not 0xFF80."""
+    from decimal import Decimal
+
+    vals = [0, 127, 128, -128, -129]
+    df = spark.createDataFrame([(i, Decimal(v)) for i, v in enumerate(vals)],
+                               "i long, v decimal(10,0)")
+    ok, _ = execute(spark, ["set-type v bytes"], df)
+    got = [bytes(r["v"]) for r in ok.orderBy("i").collect()]
+    scale = bytes(4)
+    assert got == [scale + b"\x00", scale + b"\x7f", scale + b"\x00\x80",
+                   scale + b"\x80", scale + b"\xff\x7f"]
+
+
 def test_set_type_decimal_rounding_modes(spark):
     """Exact java.math.RoundingMode semantics, incl. the negative-value
     distinctions (FLOOR vs DOWN, CEILING vs UP) and HALF_DOWN ties

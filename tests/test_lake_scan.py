@@ -7,6 +7,8 @@ semantics come from the north rule's Iceberg sink (manifest min/max
 stats, partition pruning, `scan` planning from metadata).
 """
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -514,3 +516,177 @@ def test_stats_sidecars_are_commit_scoped(spark, mk_table):
     on_disk = {f"_meta/{fn}" for fn in _os.listdir(meta) if fn.startswith("stats-v")}
     assert on_disk == {m["path"] for m in cur.snap["stats_manifests"]}
     assert set(cur.file_stats) == live
+
+
+# ------------------------------------------- driver-side point lookups
+
+
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs fn ran), counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"point-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "point lookup")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def _pt_rows(spark, rows, extra=False):
+    cols = "seq long, op string, repo string, path string, body string, d date, ts timestamp"
+    out = []
+    for seq, op, repo, path, body, *rest in rows:
+        i = seq % 28
+        out.append(
+            (seq, op, repo, path, body,
+             None if body is None else dt.date(2024, 1, 1 + i),
+             None if body is None else dt.datetime(2024, 1, 1 + i, 12, i, 30),
+             *rest)
+        )
+    return spark.createDataFrame(out, cols + (", extra string" if extra else ""))
+
+
+@pytest.fixture(scope="module", params=["cow", "mor"])
+def point_table(request, spark, tmp_path_factory):
+    """Base, then (in the parametrized mode) a stale lower-seq delta
+    (f1), an equal-seq delta (f2), the same seq-20 row for f3 in two
+    epochs, a tombstone (f4), a rename content→body and a column added
+    after the base was written."""
+    from pyspark.sql import types as T
+
+    mode = request.param
+    schema = T.StructType([
+        T.StructField("repo", T.StringType()), T.StructField("path", T.StringType()),
+        T.StructField("content", T.StringType()), T.StructField("d", T.DateType()),
+        T.StructField("ts", T.TimestampType()),
+    ])
+    t = LakeTable.create(spark, str(tmp_path_factory.mktemp("pt") / mode), schema,
+                         ["repo", "path"], num_buckets=4)
+    base = [(10, "insert", f"r{i % 4}", f"f{i}.py", f"v{i}") for i in range(32)]
+    t.merge(_pt_rows(spark, base).withColumnRenamed("body", "content"), epoch=0)
+    t.rename_column("content", "body")
+    t.merge(_pt_rows(spark, [
+        (5, "update", "r1", "f1.py", "stale"),
+        (10, "update", "r2", "f2.py", "tie"),
+        (20, "update", "r3", "f3.py", "dup"),
+        (30, "delete", "r0", "f4.py", None),
+    ]), epoch=1, mode=mode)
+    t.merge(_pt_rows(spark, [(20, "update", "r3", "f3.py", "dup")]), epoch=2, mode=mode)
+    t.merge(_pt_rows(spark, [(40, "update", "r1", "f5.py", "new5", "x5")], extra=True),
+            epoch=3, mode=mode)
+    assert bool(t.delta_rels()) == (mode == "mor")
+    return t
+
+
+POINT_CASES = {
+    "stale_delta": [("repo", "=", "r1"), ("path", "=", "f1.py")],
+    "equal_seq_delta": [("repo", "=", "r2"), ("path", "=", "f2.py")],
+    "tied_delta_copies": [("repo", "=", "r3"), ("path", "=", "f3.py")],
+    "tombstone": [("repo", "=", "r0"), ("path", "=", "f4.py")],
+    "missing_key": [("repo", "=", "nosuch"), ("path", "=", "f1.py")],
+    "in_many_buckets": [("repo", "in", ["r1", "r2"]),
+                        ("path", "in", ["f1.py", "f2.py", "f5.py", "f9.py"])],
+    "added_column": [("repo", "=", "r1"), ("path", "in", ["f5.py", "f9.py"])],
+    "renamed_alias": [("repo", "=", "r3"), ("path", "=", "f7.py"), ("body", "=", "v7")],
+    "residual_miss": [("repo", "=", "r3"), ("path", "=", "f7.py"), ("body", "=", "v8")],
+    "residual_date": [("repo", "in", ["r1", "r2"]), ("path", "in", ["f1.py", "f2.py"]),
+                      ("d", ">", dt.date(2024, 1, 8))],
+    "residual_ts": [("repo", "in", ["r1", "r3"]), ("path", "in", ["f1.py", "f3.py"]),
+                    ("ts", ">=", dt.datetime(2024, 1, 11, 12, 10, 30))],
+}
+
+
+@pytest.mark.parametrize("case", sorted(POINT_CASES))
+@pytest.mark.parametrize("with_meta", [False, True])
+def test_point_lookup_resolves_on_driver(spark, point_table, case, with_meta):
+    t = LakeTable.load(spark, point_table.path)
+    filters = POINT_CASES[case]
+    plan: dict = {}
+    got, jobs = _jobs_run(
+        spark, lambda: t.scan(filters, with_meta=with_meta, plan_out=plan).collect()
+    )
+    assert plan["driver_keys"] is not None and jobs == 0
+    cond = t._filters_to_column(filters)
+    want_df = t.read(with_meta=with_meta).filter(cond)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want_df.collect()))
+    assert t.scan(filters, with_meta=with_meta).schema == want_df.schema
+    if case == "in_many_buckets":
+        assert len(plan["buckets"]) > 1
+    expect = {
+        "stale_delta": ["v1"], "equal_seq_delta": ["v2"], "tied_delta_copies": ["dup"],
+        "tombstone": [], "missing_key": [], "renamed_alias": ["v7"], "residual_miss": [],
+    }.get(case)
+    if expect is not None and not with_meta:
+        assert [r["body"] for r in got] == expect
+    if case == "added_column" and not with_meta:
+        assert sorted((r["path"], r["extra"]) for r in got) == [
+            ("f5.py", "x5"), ("f9.py", None)]
+
+
+def test_point_lookup_non_exact_literals_stay_on_spark(spark, tmp_path):
+    """Only str literals on string keys and int (not bool) literals on
+    integral keys resolve on the driver; anything else keeps the Spark
+    plan, with the same rows as read().filter(...)."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType([
+        T.StructField("k", T.IntegerType()), T.StructField("v", T.StringType()),
+    ])
+    t = LakeTable.create(spark, str(tmp_path / "ik"), schema, ["k"], num_buckets=8)
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(-3, 4)], schema)
+    t.merge(df.withColumn("seq", F.lit(1).cast("long")).withColumn("op", F.lit("insert")),
+            epoch=0)
+    for lit_, local in ((1, True), (-3, True), (True, False), ("1", False),
+                        (1.0, False), (2**40, False)):
+        filters = [("k", "=", lit_)]
+        plan: dict = {}
+        got = sorted(map(tuple, t.scan(filters, plan_out=plan).collect()))
+        want = sorted(map(tuple, t.read().filter(t._filters_to_column(filters)).collect()))
+        assert got == want, lit_
+        assert (plan["driver_keys"] is not None) == local, lit_
+    # the driver-side pin of an exact literal equals the Spark pin
+    assert t._local_bucket_of({"k": -3}) == t._bucket_of({"k": -3})
+    # and the job counter does see the Spark plan's jobs
+    _, jobs = _jobs_run(spark, lambda: t.scan([("k", "=", 1.0)]).collect())
+    assert jobs > 0
+
+
+def test_xxhash64_matches_spark_bucket_expr(spark, tmp_path):
+    """The driver-side XXH64 equals Spark's xxhash64 / bucket_expr on
+    random keys: empty, multibyte and ≥ 32-byte strings, negative and
+    64-bit integers."""
+    import random
+
+    from pyspark.sql import types as T
+
+    from wrangler_spark.lake.xxhash import spark_xxhash64
+
+    rng = random.Random(7)
+    alphabet = "ab/_.Z09" + "éß漢字😀́"
+
+    def rstr():
+        return "".join(rng.choice(alphabet) for _ in range(rng.choice([0, 1, 3, 7, 8, 15, 31, 32, 33, 70])))
+
+    skeys = [("", ""), ("", "x"), ("😀" * 9, "漢" * 11)] + [(rstr(), rstr()) for _ in range(2000)]
+    sschema = T.StructType([T.StructField("a", T.StringType()), T.StructField("b", T.StringType())])
+    st = LakeTable.create(spark, str(tmp_path / "s"), sschema, ["a", "b"], num_buckets=97)
+    sdf = spark.createDataFrame(skeys, sschema)
+    rows = sdf.select("a", "b", F.xxhash64("a", "b").alias("h"),
+                      st.bucket_expr(sdf).alias("bk")).collect()
+    assert len(rows) == len(skeys)
+    for r in rows:
+        assert spark_xxhash64(r["a"], r["b"]) == r["h"], (r["a"], r["b"])
+        assert st._local_bucket_of({"a": r["a"], "b": r["b"]}) == r["bk"]
+
+    ikeys = [0, -1, 1, 2**63 - 1, -(2**63)] + [rng.randrange(-(2**63), 2**63) for _ in range(1000)]
+    lschema = T.StructType([T.StructField("k", T.LongType())])
+    lt = LakeTable.create(spark, str(tmp_path / "l"), lschema, ["k"], num_buckets=61)
+    ldf = spark.createDataFrame([(k,) for k in ikeys], lschema)
+    for r in ldf.select("k", lt.bucket_expr(ldf).alias("bk")).collect():
+        assert lt._local_bucket_of({"k": r["k"]}) == r["bk"], r["k"]

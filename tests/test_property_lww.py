@@ -67,3 +67,38 @@ def test_lww_merge_matches_python_fold(spark, tmp_path_factory, log):
         (r["repo"], r["path"]): r["content"] for r in table.read().collect()
     }
     assert got == _fold(events)
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(event_log())
+def test_mor_arrow_resolution_matches_python_fold(spark, tmp_path_factory, log):
+    """Later batches land as merge-on-read deltas; the Arrow resolver —
+    through driver-side point lookups and the batch `lake` source —
+    must agree with the per-key fold."""
+    from wrangler_spark.lake.batch_source import read_lake
+
+    events, batches = log
+    tmp = tmp_path_factory.mktemp("prop_mor")
+    table = LakeTable.create(
+        spark, str(tmp / "t"), repo_files_schema(), ["repo", "path"], num_buckets=2
+    )
+    for i, batch in enumerate(batches):
+        df = spark.createDataFrame(
+            [(s, op, r, p, c, lang, None if op == "delete" else content)
+             for (s, op, r, p, c, lang, content) in batch],
+            "seq long, op string, repo string, path string, commit string, lang string, content string",
+        )
+        table.merge(df, epoch=i, mode="cow" if i == 0 else "mor")
+    want = _fold(events)
+    got = {}
+    for repo, path in KEYS:
+        plan: dict = {}
+        rows = table.scan([("repo", "=", repo), ("path", "=", path)], plan_out=plan).collect()
+        assert plan["driver_keys"] is not None and len(rows) <= 1
+        got.update({(r["repo"], r["path"]): r["content"] for r in rows})
+    assert got == want
+    assert {(r["repo"], r["path"]): r["content"] for r in read_lake(spark, table.path).collect()} == want

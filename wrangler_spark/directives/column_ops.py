@@ -326,7 +326,9 @@ def set_type(call: DirectiveCall):
                         if v is None:
                             return None
                         unscaled = int(v.scaleb(dec_scale))
-                        nb = max(1, (unscaled.bit_length() + 8) // 8)
+                        # Java BigInteger.bitLength: −128 fits 1 byte (0x80)
+                        mag = unscaled if unscaled >= 0 else ~unscaled
+                        nb = mag.bit_length() // 8 + 1
                         return _struct.pack(">i", dec_scale) + unscaled.to_bytes(
                             nb, "big", signed=True
                         )

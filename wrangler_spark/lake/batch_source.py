@@ -34,7 +34,9 @@ Scale design, mirroring the streaming `lake-changes` source:
 - **MoR resolution is per-bucket.** highest `__seq` wins, base wins
   seq ties (the copy-on-write `s.seq > t.seq` guard), duplicate tied
   delta rows collapse to one — byte-identical semantics to
-  `LakeTable._resolved`; tombstones are filtered from the output.
+  `LakeTable._resolved`; tombstones are filtered from the output. The
+  resolver is `lake.resolve.resolve_files`, pure Arrow and shared with
+  the driver-side point lookups of `LakeTable.scan`.
 
 reference: Wrangler has no lake/table source (its connectors are
 format parsers, surveyed in SURVEY.md §2.1); the public behavioral
@@ -61,7 +63,6 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-from wrangler_spark.streaming.change_source import _arrow_type
 
 _META = "_meta"
 
@@ -242,78 +243,20 @@ class LakeBatchReader(DataSourceReader):
 
     def read(self, partition: _BucketPartition):
         """Executor-side: the bucket's base∪delta files → LWW-resolved
-        live rows as Arrow batches. Aliases resolve pre-rename files;
-        missing columns null-fill (Iceberg read-time projection)."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        schema = T.StructType.fromJson(self.schema_json)
-        fields = [(f_.name, _arrow_type(f_.dataType)) for f_ in schema.fields]
-
-        def load(path_):
-            tbl = pq.read_table(path_)
-            names_l = {n.lower(): n for n in tbl.column_names}
-
-            def col(name_l, target):
-                src = names_l.get(name_l)
-                if src is None:
-                    for a in self.aliases.get(name_l, []):
-                        src = names_l.get(a)
-                        if src is not None:
-                            break
-                if src is None:
-                    return pa.nulls(tbl.num_rows, type=target)
-                c = tbl.column(src)
-                return c.cast(target) if c.type != target else c
-
-            arrays = [col(n.lower(), at) for n, at in fields]
-            out_fields = [pa.field(n, at) for n, at in fields]
-            arrays.append(col("__seq", pa.int64()))
-            out_fields.append(pa.field("__seq", pa.int64()))
-            deleted = col("__deleted", pa.bool_())
-            import pyarrow.compute as pc
-
-            arrays.append(pc.fill_null(deleted, False))
-            out_fields.append(pa.field("__deleted", pa.bool_()))
-            return pa.table(arrays, schema=pa.schema(out_fields))
-
+        live rows as Arrow batches (`lake.resolve.resolve_files`)."""
         import pyarrow.compute as pc
 
-        base = [load(p) for p in partition.base_files]
-        out = pa.concat_tables(base) if base else None
-        if partition.delta_files:
-            delta = pa.concat_tables([load(p) for p in partition.delta_files])
-            both = delta if out is None else pa.concat_tables(
-                [out.append_column("__is_base", pa.nulls(out.num_rows, pa.bool_()).fill_null(True)),
-                 delta.append_column("__is_base", pa.nulls(delta.num_rows, pa.bool_()).fill_null(False))]
-            )
-            if out is None:
-                both = both.append_column(
-                    "__is_base", pa.nulls(both.num_rows, pa.bool_()).fill_null(False)
-                )
-            pdf = both.to_pandas()
-            keys = [
-                next(n for n, _ in fields if n.lower() == k.lower())
-                for k in self.key_cols
-            ]
-            # highest seq wins; base wins ties; tied duplicate delta
-            # rows collapse to one — LakeTable._resolved semantics
-            pdf = (
-                pdf.sort_values([*keys, "__seq", "__is_base"], kind="stable")
-                .groupby(keys, as_index=False, sort=False)
-                .tail(1)
-            )
-            pdf = pdf[~pdf["__deleted"]].drop(columns=["__seq", "__deleted", "__is_base"])
-            out = pa.Table.from_pandas(
-                pdf, schema=pa.schema([pa.field(n, at) for n, at in fields]),
-                preserve_index=False,
-            )
-        else:
-            if out is None:
-                return iter(())
-            out = out.filter(pc.equal(out.column("__deleted"), False))
-            out = out.drop(["__seq", "__deleted"])
-        yield from out.to_batches()
+        from wrangler_spark.lake.resolve import resolve_files
+
+        out = resolve_files(
+            partition.base_files, partition.delta_files,
+            T.StructType.fromJson(self.schema_json), self.aliases, self.key_cols,
+        )
+        out = out.filter(pc.invert(out.column("__deleted")))
+        # per-file chunks can come out of the filter empty; skip them
+        for batch in out.drop_columns(["__seq", "__deleted"]).to_batches():
+            if batch.num_rows:
+                yield batch
 
 
 class LakeDataSource(DataSource):

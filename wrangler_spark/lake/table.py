@@ -350,6 +350,10 @@ def _refresh_stats(path: str, snap: dict, spark: SparkSession | None = None) -> 
 
 _SCAN_OPS = ("=", "<", "<=", ">", ">=", "in")
 
+# integral key dtypes → 2^(bits-1): the literal range a driver-side pin
+# accepts for them
+_INT_RANGE = {T.ByteType: 1 << 7, T.ShortType: 1 << 15, T.IntegerType: 1 << 31, T.LongType: 1 << 63}
+
 # numeric widening lattice for schema evolution (set-type widen →
 # ALTER TABLE ... TYPE; reference column/SetType.java:126-176)
 _WIDEN_ORDER = ["tinyint", "smallint", "int", "bigint", "float", "double"]
@@ -871,10 +875,43 @@ class LakeTable:
         return self.read().count()
 
     # ------------------------------------------------------------ scan (data skipping)
+    def _local_bucket_of(self, key_values: dict) -> int | None:
+        """Bucket of one fully-pinned key computed on the driver, or
+        None when some literal is not of its key's exact type (`str` on
+        a string key; `int`, not `bool`, within an integral key's range).
+        Those literals render as the stored dtype does under
+        `bucket_expr`'s string cast, so the pure-Python XXH64 hashes the
+        same bytes Spark does; anything else goes to `_bucket_of`."""
+        from wrangler_spark.lake.xxhash import spark_xxhash64
+
+        fields = {f.name.lower(): f for f in self.schema.fields}
+        rendered = []
+        for k in self.key_cols:
+            fld = fields.get(k.lower())
+            v = key_values[k]
+            dtype = type(fld.dataType) if fld is not None else None
+            # plain (binary-collated) strings hash their UTF-8 bytes
+            if fld is not None and fld.dataType == T.StringType() and isinstance(v, str):
+                rendered.append(v)
+            elif (
+                dtype in _INT_RANGE
+                and isinstance(v, int)
+                and not isinstance(v, bool)
+                and -_INT_RANGE[dtype] <= v < _INT_RANGE[dtype]
+            ):
+                rendered.append(str(v))
+            else:
+                return None
+        try:
+            return spark_xxhash64(*rendered) % self.num_buckets
+        except UnicodeEncodeError:  # lone surrogate: not a UTF-8 string
+            return None
+
     def _bucket_of(self, key_values: dict) -> int | None:
         """Bucket of one fully-pinned key — the same xxhash64 Spark uses
         (bucket_expr), evaluated over a single literal row. One
-        constant-folded 1-row job; the point-lookup planning cost.
+        constant-folded 1-row job: the planning cost of a pin that
+        `_local_bucket_of` cannot compute on the driver.
 
         bucket_expr hashes F.col(k).cast('string'), i.e. the STORED
         dtype's string rendering — a raw F.lit(v) can render differently
@@ -978,15 +1015,20 @@ class LakeTable:
         return True
 
     def scan_plan(self, filters: list | None = None, buckets: list[int] | None = None) -> dict:
-        """Driver-side metadata pruning for `scan` — no Spark job except
-        the optional 1-row point-lookup hash. Returns the kept base file
-        relpaths, the buckets still in play, and skip counts.
+        """Driver-side metadata pruning for `scan`. Returns the kept base
+        file relpaths, the buckets still in play, skip counts, and
+        `driver_keys` ({key: [literals]}) when the scan can resolve on
+        the driver (see `scan`), else None.
 
         Two pruning layers, both pure metadata (the 100 TB property: at
         millions of files, scan PLANNING must prune from the manifest —
         this snapshot's `stats` — not by listing/opening data files):
-        - bucket pruning: filters pinning every key column by equality
-          resolve to exactly one hash bucket;
+        - bucket pruning: filters pinning every key column by =/IN (at
+          most 8 key combinations) resolve to one hash bucket per
+          combination. Literals of the key's exact type on string and
+          integral keys hash on the driver (`lake.xxhash`, zero jobs);
+          any other pin costs one 1-row Spark hash job per combination
+          (and an =/IN filter on a `bloom.cols` column one probe job);
         - file skipping: a file whose footer [min, max] range provably
           excludes a conjunct is dropped before Spark sees it.
 
@@ -1019,6 +1061,7 @@ class LakeTable:
                 if vals:
                     eqmulti.setdefault(cl, vals)
         point = bool(keys_l) and all(k in eqmulti for k in keys_l)
+        driver_keys = None
         if point:
             import itertools
 
@@ -1026,17 +1069,32 @@ class LakeTable:
             n_combos = 1
             for lst in combo_lists:
                 n_combos *= len(lst)
-            if n_combos <= 8:  # planning cost: one 1-row hash job each
-                pins = set()
-                ok = True
-                for combo in itertools.product(*combo_lists):
-                    b = self._bucket_of(dict(zip(self.key_cols, combo)))
-                    if b is None:
-                        ok = False
-                        break
-                    pins.add(b)
-                if ok:
+            if n_combos <= 8:
+                combos = [
+                    dict(zip(self.key_cols, c)) for c in itertools.product(*combo_lists)
+                ]
+
+                def pin_all(bucket_of):
+                    pins = set()
+                    for kv in combos:
+                        b = bucket_of(kv)
+                        if b is None:
+                            return None
+                        pins.add(b)
+                    return pins
+
+                # exact-type literals on string/integral keys hash on the
+                # driver; any other pin costs one 1-row Spark job per combo
+                pins = pin_all(self._local_bucket_of)
+                exact = pins is not None
+                if not exact:
+                    pins = pin_all(self._bucket_of)
+                if pins is not None:
                     cand = [x for x in cand if x in pins]
+                    from wrangler_spark.lake.resolve import arrow_supported
+
+                    if exact and arrow_supported(self.schema):
+                        driver_keys = dict(zip(self.key_cols, combo_lists))
             else:
                 point = False
         stats = self.file_stats
@@ -1066,6 +1124,7 @@ class LakeTable:
             "bloom_skipped_files": bloom_skipped,
             "delta_buckets": delta_buckets,
             "point_lookup": point,
+            "driver_keys": driver_keys,
         }
 
     def _bloom_probes(self, eq: dict) -> tuple[dict, dict]:
@@ -1153,18 +1212,54 @@ class LakeTable:
         predicate is ALSO applied as a real Spark filter (and pushed into
         the parquet scan by Catalyst for row-group-level skipping).
         `plan_out` (optional dict) receives the scan_plan for
-        observability/tests."""
+        observability/tests.
+
+        A point lookup — every key column pinned by =/IN literals of its
+        exact type, on string/integral keys — plans and resolves with
+        zero Spark jobs: pyarrow reads the pinned buckets' kept base
+        files and pending deltas with the key values pushed down, the
+        LWW runs in Arrow (`lake.resolve`), and the rows become a local
+        relation that the residual filter, tombstone filter and
+        projection fold into. Every other scan runs the `_resolved`
+        Spark plan."""
         plan = self.scan_plan(filters, buckets)
         if plan_out is not None:
             plan_out.update(plan)
         base_files = [os.path.join(self.path, r) for r in plan["base_rels"]]
-        df, _ = self._resolved(buckets=plan["buckets"], base_files=base_files)
+        if plan["driver_keys"] is not None:
+            df = self._local_resolved(plan["buckets"], base_files, plan["driver_keys"])
+        else:
+            df, _ = self._resolved(buckets=plan["buckets"], base_files=base_files)
         cond = self._filters_to_column(filters)
         if cond is not None:
             df = df.filter(cond)
         if with_meta:
             return df
         return df.filter(~F.col("__deleted")).drop("__seq", "__deleted")
+
+    def _local_resolved(
+        self, buckets: list[int], base_files: list[str], key_values: dict
+    ) -> DataFrame:
+        """Driver-side `_resolved` for a key-pinned scan: pyarrow reads
+        the pinned buckets' kept base files and pending deltas with the
+        key literals pushed into the read, LWW resolves in Arrow
+        (`lake.resolve`), and the rows come back as a local relation —
+        filters and projections on it fold into the relation, so
+        collecting it runs no Spark job."""
+        from wrangler_spark.lake.resolve import resolve_files
+
+        tbl = resolve_files(
+            base_files, self.delta_files(buckets), self.schema, self.aliases,
+            self.key_cols, key_values=key_values,
+        )
+        schema = T.StructType(
+            [T.StructField(f_.name, f_.dataType, True) for f_ in self.schema.fields]
+            + [T.StructField("__seq", T.LongType(), False),
+               T.StructField("__deleted", T.BooleanType(), False)]
+        )
+        # one chunk: the Arrow stream behind createDataFrame ends at the
+        # first empty record batch, and per-file tables leave empty chunks
+        return self.spark.createDataFrame(tbl.combine_chunks(), schema)
 
     def _read_files(
         self,
