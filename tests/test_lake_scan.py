@@ -602,20 +602,35 @@ POINT_CASES = {
 }
 
 
+@pytest.fixture(scope="module")
+def point_reads(spark, point_table):
+    """{with_meta: (read(with_meta) schema, its rows as a local relation)}
+    — the table does not change between cases, so each read runs once
+    and read().filter(...) filters the local copy on the driver."""
+    out = {}
+    for with_meta in (False, True):
+        df = point_table.read(with_meta=with_meta)
+        out[with_meta] = (df.schema, spark.createDataFrame(df.collect(), df.schema))
+    return out
+
+
 @pytest.mark.parametrize("case", sorted(POINT_CASES))
 @pytest.mark.parametrize("with_meta", [False, True])
-def test_point_lookup_resolves_on_driver(spark, point_table, case, with_meta):
+def test_point_lookup_resolves_on_driver(spark, point_table, point_reads, case, with_meta):
     t = LakeTable.load(spark, point_table.path)
     filters = POINT_CASES[case]
     plan: dict = {}
-    got, jobs = _jobs_run(
-        spark, lambda: t.scan(filters, with_meta=with_meta, plan_out=plan).collect()
-    )
+
+    def lookup():
+        df = t.scan(filters, with_meta=with_meta, plan_out=plan)
+        return df.schema, df.collect()
+
+    (got_schema, got), jobs = _jobs_run(spark, lookup)
     assert plan["driver_keys"] is not None and jobs == 0
-    cond = t._filters_to_column(filters)
-    want_df = t.read(with_meta=with_meta).filter(cond)
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want_df.collect()))
-    assert t.scan(filters, with_meta=with_meta).schema == want_df.schema
+    read_schema, read_rows = point_reads[with_meta]
+    want = read_rows.filter(t._filters_to_column(filters)).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert got_schema == read_schema
     if case == "in_many_buckets":
         assert len(plan["buckets"]) > 1
     expect = {
