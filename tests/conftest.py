@@ -10,6 +10,29 @@ def spark():
 
 
 @pytest.fixture()
+def count_jobs(spark):
+    """count_jobs(fn) → (fn(), number of Spark jobs fn ran), counted
+    through a job group and the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        gid = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, "counted")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return run
+
+
+@pytest.fixture()
 def one_col(spark):
     """Single 'body' string column — the reference's canonical test shape
     (TestingRig pattern, TestingRig.java:79-95)."""

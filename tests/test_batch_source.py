@@ -274,3 +274,38 @@ def test_resolve_files_pushdown_on_narrower_stored_type(tmp_path):
     out = resolve_files([old, new], [], schema, {}, ["k"], key_values={"k": [2, 2**40]})
     assert sorted(out.column("k").to_pylist()) == [2, 2**40]
     assert out.schema.field("k").type == pa.int64()
+
+
+def test_lww_winners_matches_max_seq_join_back():
+    """The merge's Arrow LWW against the Spark plan's semantics written
+    as a plain-Python max-seq aggregate joined back on (keys, seq):
+    null keys and null seqs drop, every row tied at a key's max stays."""
+    import random
+
+    import pyarrow as pa
+
+    from wrangler_spark.lake.resolve import lww_winners
+
+    rng = random.Random(7)
+    rows = [
+        {"a": rng.choice(["x", "y", None]), "b": rng.choice([1, 2, None]),
+         "__seq": rng.choice([1, 2, 3, None]), "v": i}
+        for i in range(400)
+    ]
+    tbl = pa.Table.from_pylist(
+        rows, schema=pa.schema([("a", pa.string()), ("b", pa.int64()),
+                                ("__seq", pa.int64()), ("v", pa.int64())]),
+    )
+    top: dict = {}
+    for r in rows:
+        if r["__seq"] is not None:
+            k = (r["a"], r["b"])
+            top[k] = max(top.get(k, r["__seq"]), r["__seq"])
+    want = sorted(
+        r["v"] for r in rows
+        if None not in (r["a"], r["b"], r["__seq"]) and r["__seq"] == top[(r["a"], r["b"])]
+    )
+    got = lww_winners(tbl, ["a", "b"])
+    assert sorted(got.column("v").to_pylist()) == want
+    assert len(want) > 4  # ties at the max survive
+    assert lww_winners(tbl.slice(0, 0), ["a", "b"]).num_rows == 0

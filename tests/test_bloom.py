@@ -1,14 +1,16 @@
 """Per-file bloom indexes for equality pruning (Delta bloom-index
 shape): built distributed at commit time for opt-in columns, stored as
 per-commit sidecar manifests (snapshot stays O(files)), probed with
-Spark-computed hashes so build and probe can never disagree.
+Spark-equal hashes so build and probe can never disagree.
 
 Pins: (a) scan(filters) ≡ read().filter() with blooms on — pruning is
 conservative; (b) a probe between min and max (stats can't prune) but
 absent from a file skips that file via the bloom; (c) renamed columns
 probe old files through aliases; (d) time-typed bloom columns are
 refused loudly; (e) expire_snapshots collects unreferenced sidecars;
-(f) compaction rebuilds blooms for the files it writes.
+(f) compaction rebuilds blooms for the files it writes; (g) string and
+integral probe literals hash on the driver bit-equal to the Spark job,
+so a point scan on a bloom table runs no Spark job.
 """
 
 import os
@@ -178,3 +180,67 @@ def test_compaction_rebuilds_blooms(spark, mk_table):
     assert plan["bloom_skipped_files"] > 0
     f = [("content", "=", "content-yz")]
     assert scan_rows(t, f) == oracle_rows(t, f)
+
+
+def test_driver_probe_hashes_match_spark(spark, count_jobs):
+    """str literals on string columns and int literals on integral
+    columns hash on the driver, bit-equal to the Spark probe job;
+    other literals still take the job."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from wrangler_spark.lake.bloom import probe_hashes_multi
+
+    schema = T.StructType([
+        T.StructField("s", T.StringType()),
+        T.StructField("l", T.LongType()),
+        T.StructField("i", T.IntegerType()),
+        T.StructField("b", T.ByteType()),
+        T.StructField("d", T.DoubleType()),
+    ])
+    probes = {
+        "s": ["", "a", "é漢字🙂", "x" * 40, "content-aa"],
+        "l": [0, -1, 7, -(2 ** 63), 2 ** 63 - 1],
+        "i": [-5, 2 ** 31 - 1, -(2 ** 31)],
+        "b": [-128, 127],
+    }
+    got, jobs = count_jobs(lambda: probe_hashes_multi(spark, schema, probes))
+    assert jobs == 0
+    types = {f.name: f.dataType for f in schema.fields}
+    exprs, want_keys = [], []
+    for c, vals in probes.items():
+        for v in vals:
+            s = F.lit(v).cast(types[c]).cast("string")
+            exprs += [F.xxhash64(s), F.xxhash64(s, F.lit(1))]
+            want_keys.append(c)
+    row = spark.range(1).select(*exprs).collect()[0]
+    want: dict = {}
+    for n, c in enumerate(want_keys):
+        want.setdefault(c, []).append((row[2 * n], row[2 * n + 1]))
+    assert got == want
+    # a double column and a bool literal keep the 1-row Spark job, and
+    # mix with driver-hashed values of the same call
+    mixed, jobs = count_jobs(
+        lambda: probe_hashes_multi(spark, schema, {"d": [1.5], "l": [True, 3]})
+    )
+    assert jobs == 1
+    exp = spark.range(1).select(*[
+        h for s in (F.lit(1.5).cast("double").cast("string"), F.lit("1"), F.lit("3"))
+        for h in (F.xxhash64(s), F.xxhash64(s, F.lit(1)))
+    ]).collect()[0]
+    assert mixed["d"] == [(exp[0], exp[1])]
+    assert sorted(mixed["l"]) == sorted([(exp[2], exp[3]), (exp[4], exp[5])])
+
+
+def test_point_scan_with_blooms_runs_no_spark_job(spark, mk_table, count_jobs):
+    t = mk_table("zero_job")
+    t.merge(ch(spark, ROWS), epoch=0)
+    assert t.snap.get("bloom_manifests")
+    for probe, want in (("content-aa", [("r1", "a.py", "content-aa")]), ("content-mm", [])):
+        f = [("repo", "=", "r1"), ("path", "=", "a.py"), ("content", "=", probe)]
+        plan = {}
+        got, jobs = count_jobs(lambda: scan_rows(t, f, plan))
+        assert (got, jobs) == (want, 0), probe
+        assert plan["driver_keys"] is not None
+        if not want:  # the absent probe drops the pinned bucket's file
+            assert plan["skipped_files"] + plan["bloom_skipped_files"] == 1

@@ -335,3 +335,169 @@ def _cow_reference(spark):
     for e, rows in enumerate(EPOCHS):
         ref.merge(ch(spark, rows), epoch=e)
     return ref
+
+
+# ------------------------------------------------ driver-side mor merges
+#
+# A mor batch of at most merge._LOCAL_MOR_MAX_EVENTS events commits from
+# the driver (one Arrow collect, Arrow LWW, pyarrow delta files); larger
+# ones take the Spark plan. Setting the constant to -1 forces the Spark
+# plan for every batch, the empty one included.
+
+
+def test_mor_matches_cow_final_state_spark_path(spark, mk_table, monkeypatch):
+    from wrangler_spark.lake import merge as merge_mod
+
+    monkeypatch.setattr(merge_mod, "_LOCAL_MOR_MAX_EVENTS", -1)
+    test_mor_matches_cow_final_state(spark, mk_table)
+
+
+def test_small_mor_merge_runs_one_spark_job(spark, mk_table, count_jobs):
+    """With the batch metrics given (as the replayer's watermark agg
+    gives them), a small mor merge is one Spark job: the collect."""
+    t = mk_table("jobs")
+    df = ch(spark, EPOCHS[1])
+    metrics = {"events": 4, "inserts": 1, "updates": 2, "deletes": 1, "max_seq": 23}
+    res, jobs = count_jobs(lambda: t.merge(df, epoch=0, mode="mor", metrics=metrics))
+    assert jobs == 1
+    assert (res["mode"], res["keys"], res["version"]) == ("mor", 3, t.version)
+    assert snap_rows(t) == [("r1", "a.py", "c3", "a2"), ("r4", "z.c", "c1", "z0")]
+
+
+_BASE = "seq long, op string, repo string, path string, commit string, lang string, "
+
+# (case, batch schema, rows, merge kwargs, table properties set first);
+# applied in order to one table per path, so later cases see the
+# columns earlier ones added or renamed
+PARITY_CASES = [
+    # NOT NULL batch columns: both writers store them as required fields
+    ("duplicate_keys", "seq long NOT NULL, op string NOT NULL, repo string NOT NULL, "
+     "path string NOT NULL, commit string, lang string, content string", [
+        (10, "insert", "r1", "a.py", "c1", "py", "a0"),
+        (12, "update", "r1", "a.py", "c2", "py", "a2"),
+        (11, "update", "r1", "a.py", "c3", "py", "a1"),
+        (13, "insert", "r2", "b.py", "c1", "py", "b0"),
+        (15, "update", "r2", "b.py", "c2", "py", "b1"),
+        (14, "insert", "r3", "c.py", "c1", "py", "c0"),
+    ], {}, None),
+    ("tied_max_seq", _BASE + "content string", [
+        (20, "update", "r1", "a.py", "c4", "py", "tie"),
+        (20, "update", "r1", "a.py", "c4", "py", "tie"),
+        (19, "update", "r1", "a.py", "c5", "py", "older"),
+        (21, "update", "r2", "b.py", "c3", "py", "b2"),
+    ], {}, None),
+    ("null_key_or_seq", _BASE + "content string", [
+        (30, "insert", None, "n.py", "c1", "py", "null repo"),
+        (31, "insert", "r5", None, "c1", "py", "null path"),
+        (None, "insert", "r6", "s.py", "c1", "py", "null seq"),
+        (32, "insert", "r6", "s.py", "c1", "py", "s0"),
+        (None, "insert", "r7", "t.py", "c1", "py", "only null seq"),
+        (33, "update", "r3", "c.py", "c2", "py", "c1"),
+    ], {}, None),
+    ("tombstones", _BASE + "content string", [
+        (40, "delete", "r1", "a.py", None, None, None),
+        (41, "delete", "r9", "never.py", None, None, None),
+        (39, "update", "r2", "b.py", "c9", "py", "stale"),
+        (42, "delete", "r3", "c.py", None, None, None),
+        (43, "insert", "r3", "c.py", "c3", "py", "c2"),
+    ], {}, None),
+    ("added_column", _BASE + "content string, stars long", [
+        (50, "insert", "r8", "u.py", "c1", "py", "u0", 5),
+        (51, "update", "r2", "b.py", "c4", "py", "b3", None),
+    ], {}, None),
+    ("renamed_column", _BASE + "body string, stars long", [
+        (60, "update", "r8", "u.py", "c2", "py", "u1", 6),
+        (61, "insert", "r10", "v.py", "c1", "py", "v0", 1),
+    ], {"renames": {"content": "body"}}, None),
+    ("sort_and_split", _BASE + "body string, stars long", [
+        (70 + i, "insert", f"r{i % 2}", f"p{i:02d}.py", "c1", "py", f"s{i}", i)
+        for i in range(11)
+    ], {}, {"write.sort.cols": "path", "write.max-records-per-file": "2"}),
+    ("empty", _BASE + "body string, stars long", [], {}, None),
+    ("staged", _BASE + "body string, stars long", [
+        (90, "update", "r10", "v.py", "c2", "py", "v1", 2),
+        (91, "insert", "r11", "w.py", "c1", "py", "w0", 3),
+    ], {"staged": True}, None),
+]
+
+
+def _row_key(row):
+    return tuple((v is None, v) for v in row)
+
+
+def _delta_files_by_bucket(t):
+    """This commit's delta files (its change manifest) as {bucket:
+    [file rows in file order]}, plus the files' Arrow schemas."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    files, schemas = {}, set()
+    for rel in t.snap["changes"]:
+        b = next(p for p in rel.split(os.sep) if p.startswith("__b="))
+        tbl = pq.read_table(os.path.join(t.path, rel))
+        schemas.add(tbl.schema.remove_metadata())
+        files.setdefault(b, []).append(
+            [tuple(r.values()) for r in tbl.to_pylist()]
+        )
+    return files, schemas
+
+
+@pytest.fixture(scope="module")
+def mor_parity(spark, tmp_path_factory):
+    """Every parity case applied through both paths: {case: {path:
+    (result fields, delta files by bucket, delta file schemas, read()
+    rows at the case's version)}}."""
+    from wrangler_spark.lake import merge as merge_mod
+
+    root = tmp_path_factory.mktemp("mor_parity")
+    out = {case[0]: {} for case in PARITY_CASES}
+    for path, limit in (("arrow", merge_mod._LOCAL_MOR_MAX_EVENTS), ("spark", -1)):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(merge_mod, "_LOCAL_MOR_MAX_EVENTS", limit)
+            t = LakeTable.create(
+                spark, str(root / path), repo_files_schema(), ["repo", "path"],
+                num_buckets=4,
+            )
+            for epoch, (case, cols, rows, kw, props) in enumerate(PARITY_CASES):
+                if props:
+                    t.set_properties(props)
+                res = t.merge(spark.createDataFrame(rows, cols), epoch=epoch, mode="mor", **kw)
+                if kw.get("staged"):
+                    res["staged"].publish()
+                    t = LakeTable.load(spark, t.path)
+                fields = {k: res[k] for k in (
+                    "keys", "affected_buckets", "mode", "events", "inserts",
+                    "updates", "deletes", "version",
+                )}
+                fields["timings"] = sorted(res["timings"])
+                files, schemas = _delta_files_by_bucket(t)
+                state = sorted((tuple(r) for r in t.read().collect()), key=_row_key)
+                out[case][path] = (fields, files, schemas, state)
+    return out
+
+
+@pytest.mark.parametrize("case", [c[0] for c in PARITY_CASES])
+def test_mor_driver_path_matches_spark_path(mor_parity, case):
+    arrow, spark_ = mor_parity[case]["arrow"], mor_parity[case]["spark"]
+    assert arrow[0] == spark_[0]
+    # same rows in the same buckets; file schemas equal (nullability,
+    # no __b) up to the writer's key-value metadata
+    assert arrow[2] == spark_[2]
+    if case == "sort_and_split":
+        # sorted by path and split every 2 rows: the files themselves match
+        assert {b: sorted(fs) for b, fs in arrow[1].items()} == {
+            b: sorted(fs) for b, fs in spark_[1].items()
+        }
+        assert all(len(f) <= 2 for fs in arrow[1].values() for f in fs)
+        assert max(len(fs) for fs in arrow[1].values()) > 1
+    else:
+        def by_bucket(files):
+            return {b: sorted((r for f in fs for r in f), key=_row_key) for b, fs in files.items()}
+
+        assert by_bucket(arrow[1]) == by_bucket(spark_[1])
+    assert arrow[3] == spark_[3]
+    if case == "empty":
+        assert arrow[1] == {} and arrow[0]["keys"] == 0
+    else:
+        assert arrow[1]

@@ -102,3 +102,12 @@ def test_mor_arrow_resolution_matches_python_fold(spark, tmp_path_factory, log):
         got.update({(r["repo"], r["path"]): r["content"] for r in rows})
     assert got == want
     assert {(r["repo"], r["path"]): r["content"] for r in read_lake(spark, table.path).collect()} == want
+
+
+def test_mor_arrow_resolution_matches_python_fold_spark_path(spark, tmp_path_factory, monkeypatch):
+    """The same property with every merge-on-read batch written by the
+    Spark plan instead of the driver-side Arrow path."""
+    from wrangler_spark.lake import merge as merge_mod
+
+    monkeypatch.setattr(merge_mod, "_LOCAL_MOR_MAX_EVENTS", -1)
+    test_mor_arrow_resolution_matches_python_fold(spark, tmp_path_factory)

@@ -20,9 +20,12 @@ Design for 100 TB:
   inherently O(rows × bits-per-row) — load lazily and only when a
   scan carries an equality filter on an indexed column.
 - **Build/probe hash parity by construction.** Both sides compute
-  h1 = xxhash64(cast(v as string)), h2 = xxhash64(v_str, 1) IN SPARK
-  (the probe hashes its literals through a 1-row job, values cast
-  through the column dtype first — the `_bucket_of` lesson), and the
+  h1 = xxhash64(cast(v as string)), h2 = xxhash64(v_str, 1): the build
+  in Spark, the probe on the driver with the bit-compatible
+  `lake.xxhash` for `str` literals on string columns and `int`
+  literals on integral columns (zero jobs), through a 1-row Spark job
+  for any other literal (values cast through the column dtype first —
+  the `_bucket_of` lesson), and the
   bit mixing ((h1 mod m) + i·(h2 mod m)) mod m uses numbers small
   enough that Python int and Spark long arithmetic agree exactly.
 - Timestamp/date columns are refused: their string rendering depends
@@ -195,12 +198,18 @@ def probe_hashes_multi(
     spark: SparkSession, schema: T.StructType, eq_filters: dict
 ) -> dict:
     """Probe hashes for =/IN filters ({col: [v, …]} → {col: [(h1, h2),
-    …]}), all values hashed in the same single 1-row job — literals
-    cast through the column dtype first for exact build parity. A
-    column whose every value fails the cast is omitted (conservative:
-    no pruning); cast-failed individual values are dropped the same
-    way."""
+    …]}). A `str` literal on a string column and an `int` literal on an
+    integral column hash on the driver (`lake.xxhash`: h1 over the
+    literal's string rendering, h2 chaining the int 1 onto h1 as
+    `xxhash64(s, 1)` does). Every other value is hashed in one 1-row
+    Spark job, its literal cast through the column dtype first for
+    exact build parity. A column whose every value fails the cast is
+    omitted (conservative: no pruning); cast-failed individual values
+    are dropped the same way."""
+    from wrangler_spark.lake.xxhash import hash_int, render_literal, spark_xxhash64
+
     by_l = {f.name.lower(): f for f in schema.fields}
+    out: dict[str, list] = {}
     keys, exprs = [], []
     i = 0
     for cl, vals in sorted(eq_filters.items()):
@@ -209,6 +218,11 @@ def probe_hashes_multi(
             continue
         for v in vals:
             if v is None:
+                continue
+            rendered = render_literal(v, f.dataType)
+            if rendered is not None:
+                h1 = spark_xxhash64(rendered)
+                out.setdefault(cl, []).append((h1, hash_int(1, h1)))
                 continue
             lit = F.lit(v)
             try:
@@ -221,9 +235,8 @@ def probe_hashes_multi(
             exprs.append(s.isNull().alias(f"nul_{i}"))
             i += 1
     if not exprs:
-        return {}
+        return out
     got = spark.range(1).select(*exprs).collect()[0]
-    out: dict[str, list] = {}
     for cl, j in keys:
         if got[f"nul_{j}"]:
             continue

@@ -18,14 +18,33 @@ Scale design notes (the 100 TB story):
   runtime without us collecting anything.
 - Deletes are LWW winners with op='delete': the key simply doesn't
   reappear in the rewritten bucket.
+- A merge-on-read batch of at most `_LOCAL_MOR_MAX_EVENTS` events is
+  committed from the driver: one Arrow collect, LWW in Arrow, pyarrow
+  delta writes (`_merge_mor_local`). Everything above goes through the
+  plans above, the only ones that scale past driver memory.
 """
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from wrangler_spark.lake.table import LakeTable, evolve_schema
+
+# Merge-on-read batches of at most this many events (the merge's batch
+# metrics count) commit from the driver. A sparse 1k-event epoch writes
+# about 250 KB but ran 7 Spark jobs (the cached max-seq agg, the bucket
+# probe, a repartition shuffle and the partitioned write), so nearly all
+# of its ~1 s was fixed per-job cost; collected, it is one job plus
+# milliseconds of Arrow. 10k events of a wide row are a few MB on the
+# driver. Larger epochs keep the distributed plan, the only one that is
+# safe at any size.
+_LOCAL_MOR_MAX_EVENTS = 10_000
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
 def lww_dedup(
@@ -93,6 +112,152 @@ def lww_dedup(
     return changes.join(mx, on=[*key_cols, seq_col], how="inner")
 
 
+def _batch_metrics(changes: DataFrame, seq_col: str, op_col: str) -> dict:
+    """Batch metrics (events/inserts/updates/deletes/max_seq) in one
+    small aggregate job."""
+    mrow = changes.agg(
+        F.count(F.lit(1)).alias("events"),
+        F.sum(F.when(F.col(op_col) == "insert", 1).otherwise(0)).alias("inserts"),
+        F.sum(F.when(F.col(op_col) == "update", 1).otherwise(0)).alias("updates"),
+        F.sum(F.when(F.col(op_col) == "delete", 1).otherwise(0)).alias("deletes"),
+        F.max(seq_col).alias("max_seq"),
+    ).first()
+    return {k: mrow[k] for k in ("events", "inserts", "updates", "deletes", "max_seq")}
+
+
+def _align(df: DataFrame, schema: T.StructType, aliases: dict, extra: list) -> DataFrame:
+    """`df` projected onto the (evolved) table schema, plus `extra`."""
+    cols = []
+    have = {c.lower() for c in df.columns}
+    schema_l = {f_.name.lower() for f_ in schema.fields}
+    for f_ in schema.fields:
+        # a late producer may still emit a PRE-RENAME name: resolve
+        # the payload through the read aliases (current name wins
+        # when both are present) so old-name batches land in the
+        # renamed column instead of null (mirrors _read_files)
+        cands = [f_.name.lower()] + [
+            a
+            for a in aliases.get(f_.name.lower(), [])
+            if a in have and a not in schema_l
+        ]
+        src = next((c for c in cands if c in have), None)
+        if src is not None:
+            cols.append(F.col(src).cast(f_.dataType).alias(f_.name))
+        else:
+            cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
+    return df.select(*cols, *extra)
+
+
+def _commit_props(epoch: int | None, metrics: dict) -> dict:
+    props = {}
+    if epoch is not None:
+        props["last_epoch"] = int(epoch)
+    if metrics["max_seq"] is not None:
+        props["max_seq"] = int(metrics["max_seq"])
+    return props
+
+
+def _commit_mor(
+    table: LakeTable, delta_files: dict, metrics: dict, epoch: int | None,
+    schema: T.StructType, aliases: dict, staged: bool,
+):
+    """Commit one merge-on-read epoch. Its change-data manifest is
+    FREE: the delta files ARE this commit's change candidates (winner
+    rows + __seq/__deleted) — table_changes reads them instead of
+    diffing snapshots."""
+    change_rels = [r for rels in delta_files.values() for r in rels]
+    return table.commit(
+        {}, epoch=epoch, properties=_commit_props(epoch, metrics), schema=schema,
+        aliases=aliases, new_delta_files=delta_files, change_files=change_rels,
+        operation="merge(mor)", staged=staged,
+    )
+
+
+def _result(
+    table: LakeTable, epoch, sc, constraint_viol, metrics: dict, n_winners: int,
+    n_affected: int, timings: dict, **extra,
+) -> dict:
+    return {
+        "skipped": False,
+        "epoch": epoch,
+        "staged": sc,
+        "constraint_violations": constraint_viol,
+        "version": sc.version if sc is not None else table.version,
+        "events": metrics["events"],
+        "inserts": metrics["inserts"],
+        "updates": metrics["updates"],
+        "deletes": metrics["deletes"],
+        "keys": n_winners,
+        "affected_buckets": n_affected,
+        **extra,
+        "timings": timings,
+    }
+
+
+def _local_mor_eligible(
+    table: LakeTable, changes: DataFrame, seq_col: str, schema: T.StructType
+) -> bool:
+    """Whether a merge-on-read batch can take the driver path at all,
+    before its size is known: every column has an Arrow mapping, and
+    the key and seq columns already hold their stored types, so the
+    Arrow LWW over the aligned columns groups and compares exactly the
+    values the Spark join-back would (a cast could merge two raw keys,
+    or two fractional seqs)."""
+    from wrangler_spark.lake.resolve import arrow_supported
+
+    if not arrow_supported(schema):
+        return False
+    stored = {f_.name.lower(): f_.dataType for f_ in schema.fields}
+    batch = {f_.name.lower(): f_.dataType for f_ in changes.schema.fields}
+    return isinstance(batch.get(seq_col.lower()), _INTEGRAL) and all(
+        batch.get(k.lower()) == stored.get(k.lower()) for k in table.key_cols
+    )
+
+
+def _merge_mor_local(
+    table: LakeTable, changes: DataFrame, seq_col: str, op_col: str,
+    schema: T.StructType, aliases: dict, broadcast_keys_max: int,
+) -> tuple[dict, int, int, dict]:
+    """Write a driver-sized merge-on-read batch's LWW winners as delta
+    files from the driver: the `_align`ed batch, with `__seq`,
+    `__deleted` and Spark's own `bucket_expr` as `__b`, comes back in
+    one `toArrow()` job; `lww_winners` keeps what the Spark max-seq agg
+    and join-back keep; `write_buckets` writes the Arrow table with
+    pyarrow. Returns (delta files, winner keys, affected buckets,
+    timings) with the Spark path's meanings: the key and bucket counts
+    include the groups of null-key rows, which the agg counts and the
+    join then drops."""
+    import pyarrow.compute as pc
+
+    from wrangler_spark.lake.resolve import lww_winners
+
+    t0 = time.time()
+    tbl = _align(
+        changes,
+        schema,
+        aliases,
+        [
+            F.col(seq_col).cast("long").alias("__seq"),
+            (F.col(op_col) == "delete").alias("__deleted"),
+            table.bucket_expr(changes).alias("__b"),
+        ],
+    ).toArrow()
+    names_l = {f_.name.lower(): f_.name for f_ in schema.fields}
+    keys = [names_l[k.lower()] for k in table.key_cols]
+    n_winners = tbl.select(keys).group_by(keys).aggregate([]).num_rows
+    n_affected = len(pc.unique(tbl.column("__b")))
+    winners = lww_winners(tbl, keys)
+    t_probe = time.time() - t0
+    t1 = time.time()
+    delta_files = table.write_buckets(winners, table.version + 1)
+    timings = {
+        "probe_sec": round(t_probe, 3),
+        "write_sec": round(time.time() - t1, 3),
+        "broadcast_path": n_winners <= broadcast_keys_max,
+    }
+    return delta_files, n_winners, n_affected, timings
+
+
 def merge_into(
     table: LakeTable,
     changes: DataFrame,
@@ -102,7 +267,6 @@ def merge_into(
     evolve: bool = True,
     salted: bool = False,
     metrics: dict | None = None,
-    broadcast_hint_keys: int | None = None,
     renames: dict | None = None,
     broadcast_keys_max: int = 500_000,
     explain_sink: list | None = None,
@@ -128,6 +292,15 @@ def merge_into(
     resolves them in its base read and clears them for the buckets it
     rewrites.
 
+    A mor batch of at most `_LOCAL_MOR_MAX_EVENTS` events (by its batch
+    metrics, resolved first) commits from the driver: one Arrow collect
+    of the aligned batch, LWW in Arrow, one pyarrow delta file per
+    bucket — one Spark job where the distributed plan runs a probe, a
+    shuffle and a partitioned write. Larger batches, schemas without an
+    Arrow mapping, batches whose key or seq columns need a cast, and
+    calls with `explain_sink` take the Spark plan; both paths write the
+    same delta rows and return the same fields.
+
     changes must contain the table key columns, `seq_col`, `op_col`
     (insert|update|delete) and payload columns. Epoch fencing: if this
     epoch was already committed the merge is skipped (idempotent replay).
@@ -137,15 +310,14 @@ def merge_into(
     watermark agg, saving this function's own full-batch scan. May be a
     zero-arg callable resolved just before commit, letting the caller
     run its metrics job CONCURRENTLY with the merge (they're needed
-    only for commit properties and the result dict).
-
-    `broadcast_hint_keys`: deprecated, ignored. The broadcast decision
-    now reads the exact winner count from the bucket-pruning probe (a
-    key+seq-bytes-only job that runs anyway), so a stale hint can never
-    force an oversized build side into memory.
+    only for commit properties and the result dict). A mor merge that
+    may take the driver path resolves it up front: the event count
+    picks the path.
     """
     if epoch is not None and int(epoch) in table.committed_epochs:
         return {"skipped": True, "epoch": epoch, "version": table.version}
+    if mode not in ("cow", "mor"):
+        raise ValueError(f"unknown merge mode: {mode!r} (cow|mor)")
 
     keys = table.key_cols
 
@@ -200,6 +372,31 @@ def merge_into(
                 (F.col(op_col) == "delete") | satisfies_all(cons)
             )
 
+    # ---- driver-sized merge-on-read batch: collect it and commit from
+    # the driver (_merge_mor_local). The event count comes from the
+    # batch metrics, resolved here rather than at commit. Catalyst's
+    # sizeInBytes cannot stand in for it: on a path-based parquet
+    # source it is not partition-pruned, so an epoch filter over the
+    # event log reads the whole log's size.
+    if (
+        mode == "mor"
+        and explain_sink is None
+        and _local_mor_eligible(table, changes, seq_col, schema)
+    ):
+        if metrics is None:
+            metrics = _batch_metrics(changes, seq_col, op_col)
+        elif callable(metrics):
+            metrics = metrics()
+        if metrics["events"] <= _LOCAL_MOR_MAX_EVENTS:
+            delta_files, n_winners, n_affected, timings = _merge_mor_local(
+                table, changes, seq_col, op_col, schema, aliases, broadcast_keys_max
+            )
+            sc = _commit_mor(table, delta_files, metrics, epoch, schema, aliases, staged)
+            return _result(
+                table, epoch, sc, constraint_viol, metrics, n_winners, n_affected,
+                timings, mode="mor",
+            )
+
     # ---- LWW winner per key (salted two-stage hash agg; no window sort).
     # Shape: tiny max-seq agg over a (keys, seq) projection, cached, then
     # a join back to the full rows (measured 10× faster than
@@ -211,9 +408,7 @@ def merge_into(
     # (a key-count burst degrades gracefully to the shuffle join, the
     # right plan at that size). broadcast keeps the full payload stream
     # shuffle-free for typical epochs (≤500k keys).
-    import time as _time
-
-    _t0 = _time.time()
+    _t0 = time.time()
     proj = changes.select(*keys, seq_col)
     if salted:
         salt = F.pmod(F.xxhash64(F.col(seq_col)), F.lit(16))
@@ -230,7 +425,7 @@ def merge_into(
     bucket_counts = mx.groupBy("__b").count().collect()
     affected = sorted(r["__b"] for r in bucket_counts)
     n_winners = sum(r["count"] for r in bucket_counts)
-    _t_probe = _time.time() - _t0
+    _t_probe = time.time() - _t0
 
     winners_broadcast = n_winners <= broadcast_keys_max
     build = F.broadcast(mx) if winners_broadcast else mx
@@ -249,43 +444,15 @@ def merge_into(
     # ---- metrics on the change batch (precomputed by the replayer's
     # watermark agg when available; one small agg job otherwise)
     if metrics is None:
-        mrow = changes.agg(
-            F.count(F.lit(1)).alias("events"),
-            F.sum(F.when(F.col(op_col) == "insert", 1).otherwise(0)).alias("inserts"),
-            F.sum(F.when(F.col(op_col) == "update", 1).otherwise(0)).alias("updates"),
-            F.sum(F.when(F.col(op_col) == "delete", 1).otherwise(0)).alias("deletes"),
-            F.max(seq_col).alias("max_seq"),
-        ).first()
-        metrics = {k: mrow[k] for k in ("events", "inserts", "updates", "deletes", "max_seq")}
-
-    wb = winners
-
-    def _align(df: DataFrame, extra: list) -> DataFrame:
-        cols = []
-        have = {c.lower() for c in df.columns}
-        schema_l = {f_.name.lower() for f_ in schema.fields}
-        for f_ in schema.fields:
-            # a late producer may still emit a PRE-RENAME name: resolve
-            # the payload through the read aliases (current name wins
-            # when both are present) so old-name batches land in the
-            # renamed column instead of null (mirrors _read_files)
-            cands = [f_.name.lower()] + [
-                a
-                for a in aliases.get(f_.name.lower(), [])
-                if a in have and a not in schema_l
-            ]
-            src = next((c for c in cands if c in have), None)
-            if src is not None:
-                cols.append(F.col(src).cast(f_.dataType).alias(f_.name))
-            else:
-                cols.append(F.lit(None).cast(f_.dataType).alias(f_.name))
-        return df.select(*cols, *extra)
+        metrics = _batch_metrics(changes, seq_col, op_col)
 
     # winners aligned to the evolved schema, carrying merge metadata:
     # __seq (LWW guard) and __deleted (tombstone — deletes are KEPT as
     # tombstone rows so a late, lower-seq update cannot resurrect a key)
     changes_aligned = _align(
-        wb,
+        winners,
+        schema,
+        aliases,
         [
             F.col(seq_col).cast("long").alias("__seq"),
             (F.col(op_col) == "delete").alias("__deleted"),
@@ -293,8 +460,6 @@ def merge_into(
         ],
     )
 
-    if mode not in ("cow", "mor"):
-        raise ValueError(f"unknown merge mode: {mode!r} (cow|mor)")
     if mode == "mor":
         # merge-on-read: the winners ARE the commit — write them as
         # bucketed delta files and stop. No base bucket is read, so the
@@ -310,53 +475,30 @@ def merge_into(
             with _rs(_buf):
                 changes_aligned.explain("formatted")
             explain_sink.append(_buf.getvalue())
-        _t1 = _time.time()
+        _t1 = time.time()
         delta_files = table.write_buckets(changes_aligned, new_version)
-        _t_write = _time.time() - _t1
+        _t_write = time.time() - _t1
         if callable(metrics):
             metrics = metrics()
-        props = {}
-        if epoch is not None:
-            props["last_epoch"] = int(epoch)
-        if metrics["max_seq"] is not None:
-            props["max_seq"] = int(metrics["max_seq"])
-        # mor change-data manifest is FREE: the delta files ARE this
-        # commit's change candidates (winner rows + __seq/__deleted) —
-        # table_changes reads them instead of diffing snapshots
-        change_rels = [r for rels in delta_files.values() for r in rels]
-        sc = table.commit(
-            {}, epoch=epoch, properties=props, schema=schema, aliases=aliases,
-            new_delta_files=delta_files, change_files=change_rels,
-            operation="merge(mor)", staged=staged,
-        )
+        sc = _commit_mor(table, delta_files, metrics, epoch, schema, aliases, staged)
         winners.unpersist()
         mx.unpersist()
-        return {
-            "skipped": False,
-            "epoch": epoch,
-            "staged": sc,
-            "constraint_violations": constraint_viol,
-            "version": sc.version if sc is not None else table.version,
-            "events": metrics["events"],
-            "inserts": metrics["inserts"],
-            "updates": metrics["updates"],
-            "deletes": metrics["deletes"],
-            "keys": n_winners,
-            "affected_buckets": len(affected),
-            "mode": "mor",
-            "timings": {
-                "probe_sec": round(_t_probe, 3),
-                "write_sec": round(_t_write, 3),
-                "broadcast_path": winners_broadcast,
-            },
+        timings = {
+            "probe_sec": round(_t_probe, 3),
+            "write_sec": round(_t_write, 3),
+            "broadcast_path": winners_broadcast,
         }
+        return _result(
+            table, epoch, sc, constraint_viol, metrics, n_winners, len(affected),
+            timings, mode="mor",
+        )
 
     # base rows of the affected buckets, with stored metadata — if the
     # table holds pending merge-on-read deltas for these buckets the
     # read resolves them, and the commit below clears them (the rewrite
     # absorbs their effect)
     base = table.read(buckets=affected, with_meta=True, schema=schema, aliases=aliases)
-    base_aligned = _align(base, [F.col("__seq"), F.col("__deleted")])
+    base_aligned = _align(base, schema, aliases, [F.col("__seq"), F.col("__deleted")])
     base_aligned = base_aligned.withColumn("__b", table.bucket_expr(base_aligned))
 
     # seq-guarded merge (`WHEN MATCHED AND s.seq > t.seq`). Two plans:
@@ -442,7 +584,7 @@ def merge_into(
         post_image = changes_aligned.join(stale_keys, on=keys, how="left_anti")
 
     new_version = table.version + 1
-    _t1 = _time.time()
+    _t1 = time.time()
     # change-data files (Delta CDF equivalent): persist THIS commit's
     # POST-IMAGE — batch winners that actually beat the base — so
     # table_changes over the window is O(changes), never a full
@@ -516,7 +658,7 @@ def merge_into(
             merged.explain("formatted")
         explain_sink.append(_buf.getvalue())
     bucket_files = table.write_buckets(merged, new_version, pre_partitioned=pre_partitioned)
-    _t_write = _time.time() - _t1
+    _t_write = time.time() - _t1
     # buckets that were affected but ended up empty (all keys deleted)
     for b in affected:
         bucket_files.setdefault(str(b), [])
@@ -526,34 +668,19 @@ def merge_into(
     if callable(metrics):
         metrics = metrics()
 
-    props = {}
-    if epoch is not None:
-        props["last_epoch"] = int(epoch)
-    if metrics["max_seq"] is not None:
-        props["max_seq"] = int(metrics["max_seq"])
     sc = table.commit(
-        bucket_files, epoch=epoch, properties=props, schema=schema, aliases=aliases,
-        clear_delta_buckets=affected, change_files=change_rels,
-        operation="merge", staged=staged,
+        bucket_files, epoch=epoch, properties=_commit_props(epoch, metrics),
+        schema=schema, aliases=aliases, clear_delta_buckets=affected,
+        change_files=change_rels, operation="merge", staged=staged,
     )
     winners.unpersist()
     mx.unpersist()
 
-    return {
-        "skipped": False,
-        "epoch": epoch,
-        "staged": sc,
-        "constraint_violations": constraint_viol,
-        "version": sc.version if sc is not None else table.version,
-        "events": metrics["events"],
-        "inserts": metrics["inserts"],
-        "updates": metrics["updates"],
-        "deletes": metrics["deletes"],
-        "keys": n_winners,
-        "affected_buckets": len(affected),
-        "timings": {
-            "probe_sec": round(_t_probe, 3),
-            "write_sec": round(_t_write, 3),
-            "broadcast_path": winners_broadcast,
-        },
+    timings = {
+        "probe_sec": round(_t_probe, 3),
+        "write_sec": round(_t_write, 3),
+        "broadcast_path": winners_broadcast,
     }
+    return _result(
+        table, epoch, sc, constraint_viol, metrics, n_winners, len(affected), timings
+    )

@@ -1,4 +1,5 @@
-"""Arrow-side load and merge-on-read resolution of one bucket's files.
+"""Arrow-side load and merge-on-read resolution of one bucket's files,
+and the LWW winners of a driver-sized merge batch.
 
 A bucket's base and pending delta files are a self-contained LWW
 domain (keys are bucket-aligned), so they resolve without Spark. Two
@@ -8,7 +9,11 @@ callers share this code:
 - `LakeTable.scan` point lookups, which resolve the pinned buckets on
   the driver and hand Spark a local relation.
 
-Semantics are those of `LakeTable._resolved`: highest `__seq` wins, the
+`lww_winners` is the merge side: a merge-on-read batch small enough to
+collect resolves its within-batch LWW here instead of in a Spark
+aggregate and join (`merge.merge_into`).
+
+Read semantics are those of `LakeTable._resolved`: highest `__seq` wins, the
 base wins seq ties (the copy-on-write `s.seq > t.seq` guard), and tied
 duplicate delta copies collapse to one row. Tombstones are kept (the
 `__deleted` column says which rows they are), so callers can expose
@@ -149,3 +154,28 @@ def resolve_files(
     )
     both = both.take(order)
     return both.filter(_first_per_key(both, keys)).drop_columns(["__is_base"])
+
+
+def lww_winners(tbl: pa.Table, keys: list[str], seq: str = "__seq") -> pa.Table:
+    """Every row at its key's highest `seq`: the Spark merge's max-seq
+    aggregate joined back on (keys, seq). Rows with a null key or a
+    null seq drop out, as they never match that inner equi-join, and
+    every row tied at the max stays (readers collapse tied copies)."""
+    valid = None
+    for c in [*keys, seq]:
+        v = pc.is_valid(tbl.column(c))
+        valid = v if valid is None else pc.and_(valid, v)
+    tbl = tbl.filter(valid)
+    if tbl.num_rows == 0:
+        return tbl
+    order = pc.sort_indices(
+        tbl, sort_keys=[*((k, "ascending") for k in keys), (seq, "descending")]
+    )
+    tbl = tbl.take(order)
+    first = _first_per_key(tbl, keys)
+    # each row's run (key) index, and the seq of its run's first row —
+    # the key's max after the descending seq sort
+    run = pc.subtract(pc.cumulative_sum(pc.cast(first, pa.int64())), 1)
+    seqs = tbl.column(seq).combine_chunks()
+    top = pc.take(pc.filter(seqs, first), run)
+    return tbl.filter(pc.equal(seqs, top))

@@ -37,7 +37,12 @@ environment, so this module implements the same contract natively:
   resolve base-vs-delta per key by highest `__seq` (base wins ties —
   the same strict `s.seq > t.seq` guard as the copy-on-write merge);
   while the pending-delta volume is small the resolution is a
-  broadcast join that never shuffles the base payload.
+  broadcast join that never shuffles the base payload. A batch of at
+  most `merge._LOCAL_MOR_MAX_EVENTS` events commits from the driver:
+  one Arrow collect of the aligned batch, the LWW in Arrow
+  (`lake.resolve.lww_winners`) and one pyarrow file per bucket, so the
+  epoch costs one Spark job instead of a shuffle per stage; larger
+  batches keep the Spark plan.
   `compact()` folds pending deltas back into the base buckets,
   bounding both read amplification and delta file count. This is the
   shape that holds at 10^10 events: sparse epochs (0.1% key touch
@@ -350,9 +355,40 @@ def _refresh_stats(path: str, snap: dict, spark: SparkSession | None = None) -> 
 
 _SCAN_OPS = ("=", "<", "<=", ">", ">=", "in")
 
-# integral key dtypes → 2^(bits-1): the literal range a driver-side pin
-# accepts for them
-_INT_RANGE = {T.ByteType: 1 << 7, T.ShortType: 1 << 15, T.IntegerType: 1 << 31, T.LongType: 1 << 63}
+def _dictionary_columns(tbl) -> list[str]:
+    """Columns of `tbl` that parquet-mr, Spark's writer, would keep
+    dictionary-encoded: those whose dictionary plus bit-packed indices
+    are smaller than their plain encoding. pyarrow dictionary-encodes
+    every column by default, which made mostly-unique columns (paths,
+    contents, seqs) about 6% larger than Spark's files."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = []
+    for name, col in zip(tbl.column_names, tbl.columns):
+        if pa.types.is_boolean(col.type):
+            continue  # never dictionary-encoded by parquet-mr
+        n = len(col) - col.null_count
+        uniq = pc.unique(col).drop_null()
+        if pa.types.is_string(col.type) or pa.types.is_binary(col.type):
+            # plain byte arrays carry a 4-byte length prefix
+            plain = 4 * n + (pc.sum(pc.binary_length(col)).as_py() or 0)
+            dictionary = 4 * len(uniq) + (pc.sum(pc.binary_length(uniq)).as_py() or 0)
+        else:
+            width = col.type.bit_width // 8
+            plain, dictionary = width * n, width * len(uniq)
+        if dictionary + n * max(1, (len(uniq) - 1).bit_length()) / 8 < plain:
+            out.append(name)
+    return out
+
+
+# `spark.sql.parquet.compression.codec` → pyarrow codec for driver-side
+# bucket writes (pyarrow's lz4 writes LZ4_RAW, which Spark reads for
+# both of its lz4 codecs; lzo has no pyarrow writer)
+_ARROW_CODECS = {
+    "none": "none", "uncompressed": "none", "snappy": "snappy", "gzip": "gzip",
+    "brotli": "brotli", "lz4": "lz4", "lz4_raw": "lz4", "zstd": "zstd",
+}
 
 # numeric widening lattice for schema evolution (set-type widen →
 # ALTER TABLE ... TYPE; reference column/SetType.java:126-176)
@@ -882,30 +918,17 @@ class LakeTable:
         Those literals render as the stored dtype does under
         `bucket_expr`'s string cast, so the pure-Python XXH64 hashes the
         same bytes Spark does; anything else goes to `_bucket_of`."""
-        from wrangler_spark.lake.xxhash import spark_xxhash64
+        from wrangler_spark.lake.xxhash import render_literal, spark_xxhash64
 
         fields = {f.name.lower(): f for f in self.schema.fields}
         rendered = []
         for k in self.key_cols:
             fld = fields.get(k.lower())
-            v = key_values[k]
-            dtype = type(fld.dataType) if fld is not None else None
-            # plain (binary-collated) strings hash their UTF-8 bytes
-            if fld is not None and fld.dataType == T.StringType() and isinstance(v, str):
-                rendered.append(v)
-            elif (
-                dtype in _INT_RANGE
-                and isinstance(v, int)
-                and not isinstance(v, bool)
-                and -_INT_RANGE[dtype] <= v < _INT_RANGE[dtype]
-            ):
-                rendered.append(str(v))
-            else:
+            s = None if fld is None else render_literal(key_values[k], fld.dataType)
+            if s is None:
                 return None
-        try:
-            return spark_xxhash64(*rendered) % self.num_buckets
-        except UnicodeEncodeError:  # lone surrogate: not a UTF-8 string
-            return None
+            rendered.append(s)
+        return spark_xxhash64(*rendered) % self.num_buckets
 
     def _bucket_of(self, key_values: dict) -> int | None:
         """Bucket of one fully-pinned key — the same xxhash64 Spark uses
@@ -1027,8 +1050,10 @@ class LakeTable:
           most 8 key combinations) resolve to one hash bucket per
           combination. Literals of the key's exact type on string and
           integral keys hash on the driver (`lake.xxhash`, zero jobs);
-          any other pin costs one 1-row Spark hash job per combination
-          (and an =/IN filter on a `bloom.cols` column one probe job);
+          any other pin costs one 1-row Spark hash job per combination.
+          An =/IN filter on a `bloom.cols` column probes the same way:
+          exact-type literals hash on the driver, any other literal in
+          one 1-row probe job;
         - file skipping: a file whose footer [min, max] range provably
           excludes a conjunct is dropped before Spark sees it.
 
@@ -1131,9 +1156,10 @@ class LakeTable:
         """(probe hashes, rel → col → bloom entry) for the =/IN filters
         that hit a bloom-indexed column: {col: [values]} in, {col:
         [(h1, h2), …]} out — an IN conjunct passes a file when ANY of
-        its values might be present. One 1-row Spark job hashes all
-        probe values with the exact build expressions; the sidecar
-        manifests load lazily and are cached per handle."""
+        its values might be present. `bloom.probe_hashes_multi` hashes
+        exact-type literals on the driver and any others in one 1-row
+        Spark job; the sidecar manifests load lazily and are cached per
+        handle."""
         from wrangler_spark.lake import bloom as _bloom
 
         manifests = self.snap.get("bloom_manifests") or []
@@ -1424,13 +1450,17 @@ class LakeTable:
 
     def write_buckets(
         self,
-        df: DataFrame,
+        df,
         version: int,
         pre_partitioned: bool = False,
         sort_override: list | None = None,
     ) -> dict[str, list[str]]:
         """Write df (which must carry an int `__b` bucket column) under
         data/v<version>/, one directory per bucket; returns bucket→relpaths.
+        `df` is a Spark DataFrame, or a driver-side `pyarrow.Table` (a
+        merge-on-read batch the merge collected): pyarrow then writes
+        one file per bucket, or per `write.max-records-per-file` rows,
+        into the same layout (`_write_arrow_buckets`).
 
         pre_partitioned=True skips the clustering shuffle: the caller
         guarantees rows are already reasonably bucket-aligned (the merge
@@ -1460,6 +1490,8 @@ class LakeTable:
         sort_cols = props.get("write.sort.cols")
         if isinstance(sort_cols, str):
             sort_cols = [c.strip() for c in sort_cols.split(",") if c.strip()]
+        if not isinstance(df, DataFrame):
+            return self._write_arrow_buckets(df, staging_rel, sort_cols or [])
         out_df = df if pre_partitioned else df.repartition(F.col("__b"))
         if sort_override is not None:
             # caller-supplied sort expressions (zorder compaction) — may
@@ -1484,6 +1516,61 @@ class LakeTable:
                 if fn.endswith(".parquet")
             ]
             out[b] = rels
+        return out
+
+    def _write_arrow_buckets(
+        self, tbl, staging_rel: str, sort_cols: list[str]
+    ) -> dict[str, list[str]]:
+        """pyarrow twin of the Spark bucket write for a driver-side
+        table: rows sorted by `__b` then `sort_cols` (ascending, nulls
+        first, as `sortWithinPartitions`), `__b=<k>/` directories, `__b`
+        left out of the files, the collected schema's nullability (as
+        Spark's writer keeps it), the session's parquet codec,
+        dictionary encoding where it pays (as Spark's writer decides)
+        and no Arrow schema blob in the footer. An empty table writes
+        nothing."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        if tbl.num_rows == 0:
+            return {}
+        codec = self.spark.conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
+        pa_codec = _ARROW_CODECS.get(codec)
+        if pa_codec is None:
+            raise ValueError(f"parquet codec {codec!r} has no pyarrow writer")
+        mrpf = int(self.snap.get("properties", {}).get("write.max-records-per-file") or 0)
+        names_l = {n.lower(): n for n in tbl.column_names}
+        order = pc.sort_indices(
+            tbl,
+            sort_keys=[("__b", "ascending"), *((names_l[c.lower()], "ascending") for c in sort_cols)],
+            null_placement="at_start",
+        )
+        tbl = tbl.take(order)
+        buckets = tbl.column("__b").combine_chunks()
+        data = tbl.drop_columns(["__b"])
+        out: dict[str, list[str]] = {}
+        start = 0
+        for run in pc.value_counts(buckets):
+            b, n = run["values"].as_py(), run["counts"].as_py()
+            bucket_rel = os.path.join(staging_rel, f"__b={b}")
+            os.makedirs(os.path.join(self.path, bucket_rel), exist_ok=True)
+            step = mrpf if mrpf > 0 else n
+            rels = out.setdefault(str(b), [])
+            for off in range(start, start + n, step):
+                rel = os.path.join(
+                    bucket_rel,
+                    f"part-{len(rels):05d}-{uuid.uuid4()}.c000.{codec}.parquet",
+                )
+                part = data.slice(off, min(step, start + n - off))
+                pq.write_table(
+                    part,
+                    os.path.join(self.path, rel),
+                    compression=pa_codec,
+                    use_dictionary=_dictionary_columns(part),
+                    store_schema=False,
+                )
+                rels.append(rel)
+            start += n
         return out
 
     def write_change_files(self, df: DataFrame, version: int) -> list[str]:
@@ -1634,7 +1721,6 @@ class LakeTable:
         evolve: bool = True,
         salted: bool = False,
         metrics: dict | None = None,
-        broadcast_hint_keys: int | None = None,
         renames: dict | None = None,
         broadcast_keys_max: int = 500_000,
         explain_sink: list | None = None,
@@ -1646,7 +1732,7 @@ class LakeTable:
         return merge_into(
             self, changes, seq_col=seq_col, op_col=op_col, epoch=epoch,
             evolve=evolve, salted=salted, metrics=metrics,
-            broadcast_hint_keys=broadcast_hint_keys, renames=renames,
+            renames=renames,
             broadcast_keys_max=broadcast_keys_max, explain_sink=explain_sink,
             mode=mode, staged=staged,
         )

@@ -7,13 +7,16 @@ its seed, and null arguments leave the hash unchanged. A string
 argument hashes its UTF-8 bytes. The table's bucket of a key is
 `pmod(xxhash64(cast(k1 as string), ...), num_buckets)` (see
 `LakeTable.bucket_expr`), so this module computes the bucket of a
-literal key on the driver without a Spark job.
+literal key, and the bloom probe hashes of a literal (`lake.bloom`), on
+the driver without a Spark job.
 
 reference: Spark `org.apache.spark.sql.catalyst.expressions.XXH64` and
 `XxHash64` (seed 42); the algorithm is Yann Collet's XXH64.
 """
 
 from __future__ import annotations
+
+from pyspark.sql import types as T
 
 _M = (1 << 64) - 1
 _P1 = 0x9E3779B185EBCA87
@@ -23,6 +26,9 @@ _P4 = 0x85EBCA77C2B2AE63
 _P5 = 0x27D4EB2F165667C5
 
 SPARK_SEED = 42
+
+# integral dtypes → 2^(bits-1): the literal range rendered on the driver
+INT_RANGE = {T.ByteType: 1 << 7, T.ShortType: 1 << 15, T.IntegerType: 1 << 31, T.LongType: 1 << 63}
 
 
 def _rotl(x: int, r: int) -> int:
@@ -86,3 +92,33 @@ def spark_xxhash64(*values: str) -> int:
     for v in values:
         h = xxh64(v.encode("utf-8"), h)
     return h
+
+
+def hash_int(value: int, seed: int) -> int:
+    """Spark `xxhash64` of one `int` (32-bit) argument: XXH64 of its
+    four little-endian bytes."""
+    return xxh64((value & 0xFFFFFFFF).to_bytes(4, "little"), seed)
+
+
+def render_literal(value, dtype: T.DataType) -> str | None:
+    """`cast(cast(value as dtype) as string)` computed on the driver, or
+    None when only Spark can say: a `str` literal renders as itself on a
+    plain (binary-collated) string column when it is valid UTF-8, an
+    `int` (not `bool`) literal within an integral column's range renders
+    in decimal. Other pairs (floats, dates, a literal the cast would
+    coerce or overflow) are left to a Spark job."""
+    if isinstance(value, str) and dtype == T.StringType():
+        try:
+            value.encode("utf-8")
+        except UnicodeEncodeError:  # lone surrogate: not a UTF-8 string
+            return None
+        return value
+    bound = INT_RANGE.get(type(dtype))
+    if (
+        bound is not None
+        and isinstance(value, int)
+        and not isinstance(value, bool)
+        and -bound <= value < bound
+    ):
+        return str(value)
+    return None
