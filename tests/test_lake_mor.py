@@ -353,15 +353,64 @@ def test_mor_matches_cow_final_state_spark_path(spark, mk_table, monkeypatch):
 
 
 def test_small_mor_merge_runs_one_spark_job(spark, mk_table, count_jobs):
-    """With the batch metrics given (as the replayer's watermark agg
-    gives them), a small mor merge is one Spark job: the collect."""
-    t = mk_table("jobs")
-    df = ch(spark, EPOCHS[1])
-    metrics = {"events": 4, "inserts": 1, "updates": 2, "deletes": 1, "max_seq": 23}
-    res, jobs = count_jobs(lambda: t.merge(df, epoch=0, mode="mor", metrics=metrics))
-    assert jobs == 1
-    assert (res["mode"], res["keys"], res["version"]) == ("mor", 3, t.version)
-    assert snap_rows(t) == [("r1", "a.py", "c3", "a2"), ("r4", "z.c", "c1", "z0")]
+    """A small mor merge is one Spark job, the collect, whether the
+    batch metrics are given (as the replayer's watermark agg gives
+    them) or counted from the collected batch."""
+    given = {"events": 4, "inserts": 1, "updates": 2, "deletes": 1, "max_seq": 23}
+    for name, metrics in (("given", given), ("counted", None)):
+        t = mk_table(f"jobs_{name}")
+        df = ch(spark, EPOCHS[1])
+        res, jobs = count_jobs(lambda: t.merge(df, epoch=0, mode="mor", metrics=metrics))
+        assert jobs == 1
+        assert (res["mode"], res["keys"], res["version"]) == ("mor", 3, t.version)
+        assert {k: res[k] for k in given if k != "max_seq"} == {
+            k: v for k, v in given.items() if k != "max_seq"
+        }
+        assert t.snap["properties"]["max_seq"] == 23
+        assert snap_rows(t) == [("r1", "a.py", "c3", "a2"), ("r4", "z.c", "c1", "z0")]
+
+
+def test_mor_driver_path_bounded_by_collected_batch(spark, tmp_path, monkeypatch):
+    """The driver path is gated on the batch it collects, after the
+    recipe: a recipe that explodes a 3-event epoch into 9 rows takes
+    the Spark plan when the row limit is 5, as does a batch over the
+    byte limit; the table ends up as the driver path leaves it."""
+    from wrangler_spark.cdc import Replayer
+    from wrangler_spark.lake import merge as merge_mod
+
+    ev = ch(spark, [
+        (1, "insert", "r1", "a.py,b.py,c.py", "c1", "py", "x"),
+        (2, "insert", "r2", "d.py,e.py,f.py", "c1", "py", "y"),
+        (3, "update", "r1", "a.py,b.py,g.py", "c2", "py", "z"),
+    ]).withColumn("epoch", F.lit(0).cast("long"))
+    local = []
+    real = merge_mod._merge_mor_local
+    monkeypatch.setattr(
+        merge_mod, "_merge_mor_local", lambda *a: local.append(real(*a)) or local[-1]
+    )
+    states = {}
+    for name, limits in (
+        ("driver", {}),
+        ("rows", {"_LOCAL_MOR_MAX_EVENTS": 5}),
+        ("bytes", {"_LOCAL_MOR_MAX_BYTES": 1}),
+    ):
+        with pytest.MonkeyPatch.context() as mp:
+            for attr, v in limits.items():
+                mp.setattr(merge_mod, attr, v)
+            t = LakeTable.create(
+                spark, str(tmp_path / name), repo_files_schema(), ["repo", "path"],
+                num_buckets=4,
+            )
+            rp = Replayer(
+                t, str(tmp_path / f"{name}_ck"), mode="mor",
+                recipe=["split-to-rows :path ','"],
+            )
+            res = rp.replay_epoch(ev, 0)
+        assert (local[-1] is None) == (name != "driver"), name
+        assert (res["events"], res["keys"]) == (3, 7)
+        states[name] = snap_rows(t)
+    assert len(states["driver"]) == 7
+    assert states["rows"] == states["driver"] == states["bytes"]
 
 
 _BASE = "seq long, op string, repo string, path string, commit string, lang string, "

@@ -18,10 +18,11 @@ Scale design notes (the 100 TB story):
   runtime without us collecting anything.
 - Deletes are LWW winners with op='delete': the key simply doesn't
   reappear in the rewritten bucket.
-- A merge-on-read batch of at most `_LOCAL_MOR_MAX_EVENTS` events is
-  committed from the driver: one Arrow collect, LWW in Arrow, pyarrow
-  delta writes (`_merge_mor_local`). Everything above goes through the
-  plans above, the only ones that scale past driver memory.
+- A merge-on-read batch of at most `_LOCAL_MOR_MAX_EVENTS` rows and
+  `_LOCAL_MOR_MAX_BYTES` is committed from the driver: one bounded
+  Arrow collect, LWW in Arrow, pyarrow delta writes
+  (`_merge_mor_local`). Everything larger goes through the plans
+  above, the only ones that scale past driver memory.
 """
 
 from __future__ import annotations
@@ -34,15 +35,18 @@ from pyspark.sql import types as T
 
 from wrangler_spark.lake.table import LakeTable, evolve_schema
 
-# Merge-on-read batches of at most this many events (the merge's batch
-# metrics count) commit from the driver. A sparse 1k-event epoch writes
-# about 250 KB but ran 7 Spark jobs (the cached max-seq agg, the bucket
-# probe, a repartition shuffle and the partitioned write), so nearly all
-# of its ~1 s was fixed per-job cost; collected, it is one job plus
-# milliseconds of Arrow. 10k events of a wide row are a few MB on the
-# driver. Larger epochs keep the distributed plan, the only one that is
-# safe at any size.
+# A merge-on-read batch commits from the driver when its collected,
+# aligned rows (after the recipe) number at most _LOCAL_MOR_MAX_EVENTS
+# and take at most _LOCAL_MOR_MAX_BYTES of Arrow memory. The collect
+# stops one row past the row limit, so that is what the driver holds
+# before a batch falls back to the Spark plan. Measured on a 4-core
+# host, merge of one batch into a 16-bucket table, driver vs Spark
+# plan: 260 B rows (the generated events) 0.18 vs 1.20 s at 1k rows,
+# 0.21 vs 1.03 s at 10k (2.6 MB of Arrow); 8 KB rows 0.22 vs 0.86 s at
+# 1k (8 MB), 0.62 vs 1.11 s at 5k (41 MB, Python RSS +92 MB). The byte
+# limit stays below the widest batch measured to win.
 _LOCAL_MOR_MAX_EVENTS = 10_000
+_LOCAL_MOR_MAX_BYTES = 32 << 20
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
@@ -214,34 +218,67 @@ def _local_mor_eligible(
     )
 
 
+def _arrow_metrics(tbl) -> dict:
+    """`_batch_metrics` of a collected batch (`__op` and `__seq`
+    columns): the same counts and the same nulls (the sums of an empty
+    batch are null, as Spark's are)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def count(op):
+        hit = pc.fill_null(pc.equal(tbl.column("__op"), op), False)
+        return pc.sum(pc.cast(hit, pa.int64())).as_py()
+
+    return {
+        "events": tbl.num_rows,
+        "inserts": count("insert"),
+        "updates": count("update"),
+        "deletes": count("delete"),
+        "max_seq": pc.max(tbl.column("__seq")).as_py(),
+    }
+
+
 def _merge_mor_local(
     table: LakeTable, changes: DataFrame, seq_col: str, op_col: str,
-    schema: T.StructType, aliases: dict, broadcast_keys_max: int,
-) -> tuple[dict, int, int, dict]:
+    schema: T.StructType, aliases: dict, metrics,
+) -> tuple | None:
     """Write a driver-sized merge-on-read batch's LWW winners as delta
     files from the driver: the `_align`ed batch, with `__seq`,
     `__deleted` and Spark's own `bucket_expr` as `__b`, comes back in
-    one `toArrow()` job; `lww_winners` keeps what the Spark max-seq agg
-    and join-back keep; `write_buckets` writes the Arrow table with
-    pyarrow. Returns (delta files, winner keys, affected buckets,
-    timings) with the Spark path's meanings: the key and bucket counts
-    include the groups of null-key rows, which the agg counts and the
-    join then drops."""
+    one `toArrow()` job, cut at `_LOCAL_MOR_MAX_EVENTS` + 1 rows;
+    `lww_winners` keeps what the Spark max-seq agg and join-back keep;
+    `write_buckets` writes the Arrow table with pyarrow.
+
+    Returns None, having written nothing, when the collected batch
+    passes `_LOCAL_MOR_MAX_EVENTS` rows or `_LOCAL_MOR_MAX_BYTES`: the
+    caller then takes the Spark plan. Otherwise (delta files, winner
+    keys, affected buckets, timings, metrics) with the Spark path's
+    meanings: the key and bucket counts include the groups of null-key
+    rows, which the agg counts and the join then drops. `metrics`
+    passes through untouched (a callable stays unresolved); when it is
+    None the counts come from the collected table."""
     import pyarrow.compute as pc
 
     from wrangler_spark.lake.resolve import lww_winners
 
     t0 = time.time()
-    tbl = _align(
-        changes,
-        schema,
-        aliases,
-        [
-            F.col(seq_col).cast("long").alias("__seq"),
-            (F.col(op_col) == "delete").alias("__deleted"),
-            table.bucket_expr(changes).alias("__b"),
-        ],
-    ).toArrow()
+    extra = [
+        F.col(seq_col).cast("long").alias("__seq"),
+        (F.col(op_col) == "delete").alias("__deleted"),
+        table.bucket_expr(changes).alias("__b"),
+    ]
+    if metrics is None:
+        extra.append(F.col(op_col).alias("__op"))
+    tbl = (
+        _align(changes, schema, aliases, extra)
+        .limit(max(_LOCAL_MOR_MAX_EVENTS + 1, 0))
+        .toArrow()
+    )
+    if tbl.num_rows > _LOCAL_MOR_MAX_EVENTS or tbl.nbytes > _LOCAL_MOR_MAX_BYTES:
+        return None
+    if metrics is None:
+        metrics = _arrow_metrics(tbl)
+        tbl = tbl.drop_columns(["__op"])
     names_l = {f_.name.lower(): f_.name for f_ in schema.fields}
     keys = [names_l[k.lower()] for k in table.key_cols]
     n_winners = tbl.select(keys).group_by(keys).aggregate([]).num_rows
@@ -253,9 +290,9 @@ def _merge_mor_local(
     timings = {
         "probe_sec": round(t_probe, 3),
         "write_sec": round(time.time() - t1, 3),
-        "broadcast_path": n_winners <= broadcast_keys_max,
+        "broadcast_path": False,
     }
-    return delta_files, n_winners, n_affected, timings
+    return delta_files, n_winners, n_affected, timings, metrics
 
 
 def merge_into(
@@ -292,14 +329,16 @@ def merge_into(
     resolves them in its base read and clears them for the buckets it
     rewrites.
 
-    A mor batch of at most `_LOCAL_MOR_MAX_EVENTS` events (by its batch
-    metrics, resolved first) commits from the driver: one Arrow collect
-    of the aligned batch, LWW in Arrow, one pyarrow delta file per
-    bucket — one Spark job where the distributed plan runs a probe, a
-    shuffle and a partitioned write. Larger batches, schemas without an
-    Arrow mapping, batches whose key or seq columns need a cast, and
-    calls with `explain_sink` take the Spark plan; both paths write the
-    same delta rows and return the same fields.
+    A mor batch of at most `_LOCAL_MOR_MAX_EVENTS` rows and
+    `_LOCAL_MOR_MAX_BYTES` Arrow bytes commits from the driver: one
+    Arrow collect of the aligned batch (cut one row past the row
+    limit), LWW in Arrow, one pyarrow delta file per bucket — one Spark
+    job where the distributed plan runs a probe, a shuffle and a
+    partitioned write. Larger batches, schemas without an Arrow
+    mapping, batches whose key or seq columns need a cast, and calls
+    with `explain_sink` take the Spark plan; both paths write the same
+    delta rows and return the same fields (`broadcast_path` is False on
+    the driver path, which broadcasts nothing).
 
     changes must contain the table key columns, `seq_col`, `op_col`
     (insert|update|delete) and payload columns. Epoch fencing: if this
@@ -310,9 +349,9 @@ def merge_into(
     watermark agg, saving this function's own full-batch scan. May be a
     zero-arg callable resolved just before commit, letting the caller
     run its metrics job CONCURRENTLY with the merge (they're needed
-    only for commit properties and the result dict). A mor merge that
-    may take the driver path resolves it up front: the event count
-    picks the path.
+    only for commit properties and the result dict). The driver path
+    resolves it at commit too, and computes it from the collected batch
+    when it is None.
     """
     if epoch is not None and int(epoch) in table.committed_epochs:
         return {"skipped": True, "epoch": epoch, "version": table.version}
@@ -373,24 +412,20 @@ def merge_into(
             )
 
     # ---- driver-sized merge-on-read batch: collect it and commit from
-    # the driver (_merge_mor_local). The event count comes from the
-    # batch metrics, resolved here rather than at commit. Catalyst's
-    # sizeInBytes cannot stand in for it: on a path-based parquet
-    # source it is not partition-pruned, so an epoch filter over the
-    # event log reads the whole log's size.
+    # the driver (_merge_mor_local). The size that picks the path is
+    # the collected batch's own (rows after the recipe, Arrow bytes),
+    # so a recipe that explodes rows cannot slip a large batch past it;
+    # `metrics` stays lazy until the commit, as on the Spark path.
     if (
         mode == "mor"
         and explain_sink is None
         and _local_mor_eligible(table, changes, seq_col, schema)
     ):
-        if metrics is None:
-            metrics = _batch_metrics(changes, seq_col, op_col)
-        elif callable(metrics):
-            metrics = metrics()
-        if metrics["events"] <= _LOCAL_MOR_MAX_EVENTS:
-            delta_files, n_winners, n_affected, timings = _merge_mor_local(
-                table, changes, seq_col, op_col, schema, aliases, broadcast_keys_max
-            )
+        local = _merge_mor_local(table, changes, seq_col, op_col, schema, aliases, metrics)
+        if local is not None:
+            delta_files, n_winners, n_affected, timings, metrics = local
+            if callable(metrics):
+                metrics = metrics()
             sc = _commit_mor(table, delta_files, metrics, epoch, schema, aliases, staged)
             return _result(
                 table, epoch, sc, constraint_viol, metrics, n_winners, n_affected,

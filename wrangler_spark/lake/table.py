@@ -38,8 +38,9 @@ environment, so this module implements the same contract natively:
   the same strict `s.seq > t.seq` guard as the copy-on-write merge);
   while the pending-delta volume is small the resolution is a
   broadcast join that never shuffles the base payload. A batch of at
-  most `merge._LOCAL_MOR_MAX_EVENTS` events commits from the driver:
-  one Arrow collect of the aligned batch, the LWW in Arrow
+  most `merge._LOCAL_MOR_MAX_EVENTS` rows and `_LOCAL_MOR_MAX_BYTES`
+  (as collected, after the recipe) commits from the driver: one
+  bounded Arrow collect of the aligned batch, the LWW in Arrow
   (`lake.resolve.lww_winners`) and one pyarrow file per bucket, so the
   epoch costs one Spark job instead of a shuffle per stage; larger
   batches keep the Spark plan.
@@ -354,33 +355,6 @@ def _refresh_stats(path: str, snap: dict, spark: SparkSession | None = None) -> 
 
 
 _SCAN_OPS = ("=", "<", "<=", ">", ">=", "in")
-
-def _dictionary_columns(tbl) -> list[str]:
-    """Columns of `tbl` that parquet-mr, Spark's writer, would keep
-    dictionary-encoded: those whose dictionary plus bit-packed indices
-    are smaller than their plain encoding. pyarrow dictionary-encodes
-    every column by default, which made mostly-unique columns (paths,
-    contents, seqs) about 6% larger than Spark's files."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    out = []
-    for name, col in zip(tbl.column_names, tbl.columns):
-        if pa.types.is_boolean(col.type):
-            continue  # never dictionary-encoded by parquet-mr
-        n = len(col) - col.null_count
-        uniq = pc.unique(col).drop_null()
-        if pa.types.is_string(col.type) or pa.types.is_binary(col.type):
-            # plain byte arrays carry a 4-byte length prefix
-            plain = 4 * n + (pc.sum(pc.binary_length(col)).as_py() or 0)
-            dictionary = 4 * len(uniq) + (pc.sum(pc.binary_length(uniq)).as_py() or 0)
-        else:
-            width = col.type.bit_width // 8
-            plain, dictionary = width * n, width * len(uniq)
-        if dictionary + n * max(1, (len(uniq) - 1).bit_length()) / 8 < plain:
-            out.append(name)
-    return out
-
 
 # `spark.sql.parquet.compression.codec` → pyarrow codec for driver-side
 # bucket writes (pyarrow's lz4 writes LZ4_RAW, which Spark reads for
@@ -1525,9 +1499,8 @@ class LakeTable:
         table: rows sorted by `__b` then `sort_cols` (ascending, nulls
         first, as `sortWithinPartitions`), `__b=<k>/` directories, `__b`
         left out of the files, the collected schema's nullability (as
-        Spark's writer keeps it), the session's parquet codec,
-        dictionary encoding where it pays (as Spark's writer decides)
-        and no Arrow schema blob in the footer. An empty table writes
+        Spark's writer keeps it), the session's parquet codec and no
+        Arrow schema blob in the footer. An empty table writes
         nothing."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
@@ -1566,7 +1539,6 @@ class LakeTable:
                     part,
                     os.path.join(self.path, rel),
                     compression=pa_codec,
-                    use_dictionary=_dictionary_columns(part),
                     store_schema=False,
                 )
                 rels.append(rel)
