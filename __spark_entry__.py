@@ -116,7 +116,8 @@ def _run(spark, df, recipe, lookups=None) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: treat the events table as a CDC stream — recipe the
     payload (parse the JSON props, mask the numeric value) then LWW
-    last-event-per-user via the engine's salted max_by dedup."""
+    last-event-per-user via the engine's LWW dedup (one max-seq agg
+    joined back to the rows)."""
     sf_dir = "/root/testdata/sf0.001"
     events = _t(spark, sf_dir, "events")
     ok = _run(spark, events, [

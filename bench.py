@@ -156,7 +156,7 @@ def run_queries(spark) -> dict[str, float]:
         "mask_number",       # compile-time column state machine
         "parse_json",        # from_json over events
         "hash_sha256",       # sha256 invariant
-        "cdc_lww",           # salted max_by dedup
+        "cdc_lww",           # max-seq agg + join-back LWW
         "cdc_epoch_stats",   # aggregation plane
         "dedup_exact",       # hash groupBy dedup
         "dedup_minhash",     # minhash+LSH banding

@@ -70,13 +70,17 @@ def main() -> None:
     from wrangler_spark.lake.merge import lww_dedup
 
     ev = spark.read.parquet(f"{SF}/events.parquet")
-    w = lww_dedup(ev, ["user_id"], seq_col="event_id", broadcast_keys_max=500_000)
+    w = lww_dedup(ev, ["user_id"], seq_col="event_id")
     sections.append((
         "LWW dedup (max-seq agg + join back)",
-        "The agg shuffles ONLY (key, seq); the join back is a "
-        "BroadcastHashJoin — the full payload stream never shuffles. At "
-        ">500k distinct keys per batch this degrades to a shuffle join "
-        "by design (build side no longer provably small).",
+        "One max-seq agg: partial_max runs in every map task before the "
+        "Exchange, so ONLY (key, seq) shuffles and a hot key sends at "
+        "most one row per task — no salting stage. The inner join back "
+        "on (key, seq) carries no hint: the planner sizes the (key, max "
+        "seq) side, here under the session's broadcast threshold, so it "
+        "is a BroadcastHashJoin and the full payload stream never "
+        "shuffles; AQE can still switch the join at runtime, and a batch "
+        "with too many distinct keys gets a shuffle join instead.",
         plan_of(w),
     ))
 
@@ -170,13 +174,19 @@ def main() -> None:
         [(200 + i, "update", f"r{i}", f"f{i}.py", "c3", "py", f"x{i}") for i in range(10)],
         ch.schema,
     )
-    tbl.merge(upd2, epoch=2, broadcast_keys_max=2, explain_sink=sink2)
+    from unittest import mock
+
+    # a 2-key broadcast bound turns this 10-key epoch into a key-count burst
+    with mock.patch("wrangler_spark.lake.merge._BROADCAST_MAX_KEYS", 2):
+        tbl.merge(upd2, epoch=2, explain_sink=sink2)
     sections.append((
         "MERGE INTO — degraded (key-count burst) path",
         "Past the broadcast bound the merge degrades to the classic "
-        "two-join shuffle merge (SortMergeJoin on keys) — the correct "
-        "plan when the change set is itself huge — and the write "
-        "re-clusters by bucket.",
+        "two-join merge (base LEFT JOIN winners, winners ANTI JOIN base "
+        "keys) with no broadcast hint — the correct plan when the change "
+        "set is itself huge, where both joins become SortMergeJoins on "
+        "keys — and the write re-clusters by bucket. At this audit's "
+        "10-key size the planner still broadcasts both small sides.",
         sink2[0],
     ))
 

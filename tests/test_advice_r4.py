@@ -88,13 +88,15 @@ def test_mor_tied_seq_retry_compact_keeps_invariant(spark, mk_table):
     assert snap(t) == snap(c)
 
 
-def test_mor_tied_seq_degraded_path_also_dedupes(spark, mk_table):
+def test_mor_tied_seq_degraded_path_also_dedupes(spark, mk_table, monkeypatch):
+    from wrangler_spark.lake import table as table_mod
+
     t = mk_table("retrydeg", **{})
     _mor_retry(spark, t)
     # force the degraded (non-broadcast) resolution path
-    t.commit({}, properties={"mor.read.broadcast_bytes": 0})
-    t2 = LakeTable.load(t.spark, t.path)
-    rows = t2.read().collect()
+    monkeypatch.setattr(table_mod, "_MOR_BROADCAST_MAX_BYTES", 0)
+    assert t._resolved()[1] is False  # the unaligned (degraded) plan
+    rows = t.read().collect()
     keys = [(r["repo"], r["path"]) for r in rows]
     assert sorted(keys) == sorted(set(keys))
 

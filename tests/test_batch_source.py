@@ -83,6 +83,17 @@ def test_branch_option(spark, tmp_path):
     }
 
 
+def test_branch_main_is_the_main_ref(spark, tmp_path):
+    """branch="main" names the main ref, as in LakeTable.load."""
+    t = _mk(spark, tmp_path)
+    t.merge(ch(spark, [ins(1, "a", "f.py", "base")]), epoch=0)
+    t.merge(ch(spark, [ins(2, "a", "f.py", "delta")]), epoch=1, mode="mor")
+    t.create_branch("wip").merge(ch(spark, [ins(3, "b", "g.py", "wip")]), epoch=2)
+    main = _state(read_lake(spark, t.path, branch="main"))
+    assert main == _state(read_lake(spark, t.path)) == {("a", "f.py"): "delta"}
+    assert main == _state(LakeTable.load(spark, t.path, branch="main").read())
+
+
 def test_rename_alias_resolution(spark, tmp_path):
     t = _mk(spark, tmp_path)
     t.merge(ch(spark, [ins(1, "a", "f.py", "v1")]), epoch=0)

@@ -57,6 +57,23 @@ def test_replaying_everything_again_is_noop(spark, events, tmp_path):
     assert table.version == v
 
 
+def test_watermark_agg_runs_in_the_epochs_job_group(spark, events, tmp_path, count_jobs):
+    """The watermark/metrics agg runs on a background thread. It must
+    carry the caller's job group, so cancelling the group cancels it
+    and the group counts both queries: the merge's collect and the
+    agg. No job of the epoch may run outside the group."""
+    table = LakeTable.create(
+        spark, str(tmp_path / "jg"), repo_files_schema(), ["repo", "path"], num_buckets=8
+    )
+    rp = Replayer(table, str(tmp_path / "jg_ckpt"), mode="mor")
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    res, n_jobs = count_jobs(lambda: rp.replay_epoch(events, 0))
+    assert res["events"] == EPOCH_SIZE
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped_before
+    assert n_jobs >= 2
+
+
 def test_watermarks_monotonic(spark, events, tmp_path):
     table, rp = _mk(spark, tmp_path, "t4")
     rp.replay(events)

@@ -158,18 +158,19 @@ def test_empty_epoch_merge(spark, table):
 
 def test_hot_key_flood_salted_and_plain(spark, table):
     """Skew path: one (repo, path) receives almost all events. The
-    max-seq partial agg absorbs the hot key map-side; the opt-in salted
-    two-stage agg must produce the identical result."""
+    max-seq partial agg absorbs the hot key map-side, so no salting
+    stage is needed: two floods on different keys, each in its own
+    epoch, both resolve to their last writer."""
     rows = [(i, "update", "hot/repo", "hot.py", f"c{i}", "python", f"v{i}") for i in range(500)]
     rows += [(1000 + i, "insert", f"r{i}", "x.py", "c", "python", "cold") for i in range(5)]
-    table.merge(ch(spark, rows), epoch=0, salted=True)
+    table.merge(ch(spark, rows), epoch=0)
     got = {(r["repo"], r["path"]): r["content"] for r in table.read().collect()}
     assert got[("hot/repo", "hot.py")] == "v499"
     assert len(got) == 6
 
-    # same flood unsalted into a fresh epoch on different keys
+    # a second flood into a fresh epoch on different keys
     rows2 = [(2000 + i, "update", "hot2", "h.py", f"d{i}", "python", f"w{i}") for i in range(500)]
-    table.merge(ch(spark, rows2), epoch=1, salted=False)
+    table.merge(ch(spark, rows2), epoch=1)
     got2 = {(r["repo"], r["path"]): r["content"] for r in table.read().collect()}
     assert got2[("hot2", "h.py")] == "w499"
 
@@ -246,17 +247,20 @@ def test_widen_epoch_touching_subset_of_buckets(spark, tmp_path):
         assert got[(f"r{i}", f"f{i}.py")] == i * 10
 
 
-def test_degraded_shuffle_merge_path(spark, table):
-    """Force the >broadcast_keys_max path (key-count burst): the classic
-    two-join shuffle merge must produce the same state as the broadcast
-    path, and the write re-clusters by bucket."""
+def test_degraded_shuffle_merge_path(spark, table, monkeypatch):
+    """Force the past-the-broadcast-bound path (key-count burst): the
+    classic two-join shuffle merge must produce the same state as the
+    broadcast path, and the write re-clusters by bucket."""
+    from wrangler_spark.lake import merge as merge_mod
+
+    monkeypatch.setattr(merge_mod, "_BROADCAST_MAX_KEYS", 2)
     rows = [(i, "insert", f"r{i}", f"f{i}.py", "c", "python", f"v{i}") for i in range(30)]
-    res = table.merge(ch(spark, rows), epoch=0, broadcast_keys_max=2)
+    res = table.merge(ch(spark, rows), epoch=0)
     assert res["timings"]["broadcast_path"] is False
     # upsert + delete over the existing base, still degraded
     rows2 = [(100 + i, "update", f"r{i}", f"f{i}.py", "c2", "python", f"w{i}") for i in range(10)]
     rows2.append((200, "delete", "r20", "f20.py", None, None, None))
-    res2 = table.merge(ch(spark, rows2), epoch=1, broadcast_keys_max=2)
+    res2 = table.merge(ch(spark, rows2), epoch=1)
     assert res2["timings"]["broadcast_path"] is False
     got = {(r["repo"], r["path"]): r["content"] for r in table.read().collect()}
     assert len(got) == 29  # 30 - 1 deleted
@@ -270,7 +274,7 @@ def test_degraded_shuffle_merge_path(spark, table):
     # stale update after the delete cannot resurrect (seq guard holds
     # on the degraded path too)
     table.merge(ch(spark, [(150, "update", "r20", "f20.py", "c3", "python", "zombie")]),
-                epoch=2, broadcast_keys_max=2)
+                epoch=2)
     assert ("r20", "f20.py") not in {
         (r["repo"], r["path"]) for r in table.read().collect()
     }

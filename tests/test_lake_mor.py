@@ -165,13 +165,16 @@ def test_cow_merge_absorbs_pending_deltas(spark, mk_table):
     assert not (set(deltas) & rewritten)
 
 
-def test_mor_degraded_resolution_path(spark, mk_table):
-    """Force the non-broadcast read resolution (property bytes bound = 0)
+def test_mor_degraded_resolution_path(spark, mk_table, monkeypatch):
+    """Force the non-broadcast read resolution (delta bytes bound = 0)
     and check it returns the same answer as the broadcast path."""
+    from wrangler_spark.lake import table as table_mod
+
     t = mk_table("m")
     _apply(t, spark, "mor")
     want = snap_rows(t)
-    t.snap["properties"]["mor.read.broadcast_bytes"] = 0
+    monkeypatch.setattr(table_mod, "_MOR_BROADCAST_MAX_BYTES", 0)
+    assert t._resolved()[1] is False  # the unaligned (degraded) plan
     assert snap_rows(t) == want
 
 

@@ -12,8 +12,8 @@ content) keyed by (repo, path), with
 Everything is a pure Column expression over spark.range(n) — no driver
 loop, no Python UDF — so the generator itself scales to 10^10 events
 (spark.range is a parallel, splittable source). Keys follow a zipf-ish
-skew (quadratic concentration) so a few hot repos exercise the salted
-dedup + AQE skew path.
+skew (quadratic concentration) so a few hot repos exercise the LWW
+dedup's map-side max-seq agg and join back under skew.
 """
 
 from __future__ import annotations
@@ -113,5 +113,5 @@ def expected_final_state(events: DataFrame, key_cols=("repo", "path")) -> DataFr
     rows (per-row content sha256 equality)."""
     from wrangler_spark.lake.merge import lww_dedup
 
-    winners = lww_dedup(events, list(key_cols), seq_col="seq", salted=False)
+    winners = lww_dedup(events, list(key_cols), seq_col="seq")
     return winners.filter(F.col("op") != "delete").drop("op", "seq", "epoch", "source_partition")

@@ -23,9 +23,9 @@ from __future__ import annotations
 
 import json
 import os
-import threading
 import time
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,7 +43,6 @@ class Replayer:
         op_col: str = "op",
         epoch_col: str = "epoch",
         partition_col: str = "source_partition",
-        cache_batches: bool = False,
         error_dir: str | None = None,
         lookups: dict | None = None,
         precondition: str | None = None,
@@ -67,14 +66,6 @@ class Replayer:
         self.op_col = op_col
         self.epoch_col = epoch_col
         self.partition_col = partition_col
-        # optionally cache one epoch's raw batch across its consumers
-        # (watermark/metrics agg, dedup, join, write). Default OFF:
-        # measured on local[32] the deserialized cache's block/memory-
-        # manager contention cost MORE than recomputing the narrow
-        # read+transform (63K ev/s cached vs 91K uncached at 4M events);
-        # columnar parquet re-reads are cheap and pruned. Turn on for
-        # expensive recipes over slow sources.
-        self.cache_batches = cache_batches
         # error-channel sink (reference error port): recipe directives
         # that route rows to error (send-to-error, failed validations)
         # land here as epoch-partitioned parquet
@@ -170,7 +161,6 @@ class Replayer:
         events: DataFrame,
         from_epoch: int | None = None,
         to_epoch: int | None = None,
-        salted: bool = False,
         evolve: bool = True,
         epochs: list[int] | None = None,
     ) -> dict:
@@ -209,7 +199,7 @@ class Replayer:
         total = {"epochs": 0, "events": 0, "skipped_epochs": 0, "elapsed_sec": 0.0}
         t0 = time.time()
         for e in epochs:
-            res = self.replay_epoch(events, int(e), salted=salted, evolve=evolve)
+            res = self.replay_epoch(events, int(e), evolve=evolve)
             total["epochs"] += 1
             if res.get("skipped"):
                 total["skipped_epochs"] += 1
@@ -221,9 +211,7 @@ class Replayer:
         )
         return total
 
-    def replay_epoch(
-        self, events: DataFrame, epoch: int, salted: bool = False, evolve: bool = True
-    ) -> dict:
+    def replay_epoch(self, events: DataFrame, epoch: int, evolve: bool = True) -> dict:
         t0 = time.time()
         if epoch in self.table.committed_epochs:
             # fenced: already committed (e.g. crash after commit, before
@@ -233,8 +221,6 @@ class Replayer:
             return res
 
         batch = events.filter(F.col(self.epoch_col) == epoch)
-        if self.cache_batches:
-            batch = batch.cache()
         transformed, err = self._apply_recipe(batch)
 
         # per-source-partition high-watermark AND lineage for this epoch —
@@ -245,7 +231,9 @@ class Replayer:
         # the partitions), so the merge skips its own full-batch scan.
         # The job runs on a BACKGROUND thread, concurrent with the merge
         # (SparkContext job submission is thread-safe); the merge resolves
-        # it only at commit time.
+        # it only at commit time. An InheritableThread carries the
+        # caller's job group and description into the job, so cancelling
+        # the epoch's group cancels it too.
         group = (
             [self.partition_col]
             if self.partition_col in batch.columns
@@ -266,7 +254,7 @@ class Replayer:
             except BaseException as e:  # noqa: BLE001 — re-raised on join
                 wm_box["error"] = e
 
-        wm_thread = threading.Thread(target=_wm_job, daemon=True)
+        wm_thread = InheritableThread(target=_wm_job, daemon=True)
         wm_thread.start()
 
         def _resolve_metrics() -> dict:
@@ -301,7 +289,6 @@ class Replayer:
             op_col=self.op_col,
             epoch=epoch,
             evolve=evolve,
-            salted=salted,
             metrics=_resolve_metrics,
             # recipe-declared renames → lake schema renames (Iceberg
             # RENAME COLUMN equivalent; pre-rename files read via alias)
@@ -363,8 +350,6 @@ class Replayer:
                 res["maintain"] = self.table.maintain(**self.maintain_opts)
                 self._commits_since_maintain = 0
         wm_rows = wm_box.get("rows", [])
-        if self.cache_batches:
-            batch.unpersist()
 
         has_parts = self.partition_col in batch.columns
 

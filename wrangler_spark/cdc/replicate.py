@@ -46,7 +46,6 @@ class Replicator:
         recipe: str | list[str] | CompiledRecipe | None = None,
         mode: str = "cow",
         on_error: str = "fail",
-        salted: bool = False,
     ):
         if on_error not in ("fail", "skip"):
             raise ValueError(f"on_error must be 'fail' or 'skip', got {on_error!r}")
@@ -54,9 +53,6 @@ class Replicator:
         self.replica = replica
         self.mode = mode
         self.on_error = on_error
-        # skew passthrough: a hot source key is just as hot on the
-        # replica's merge — same salting knob as the Replayer's
-        self.salted = salted
         if recipe is not None and not isinstance(recipe, CompiledRecipe):
             recipe = compile_recipe(recipe)
         self.recipe = recipe
@@ -162,7 +158,9 @@ class Replicator:
                         break
         # epoch = the window's upper bound: re-running the same window
         # (crash between merge and caller's bookkeeping) is a fenced
-        # no-op inside the replica's own committed_epochs
+        # no-op inside the replica's own committed_epochs. A hot source
+        # key is just as hot here; the merge's single max-seq agg
+        # combines it map-side before the join back.
         res = self.replica.merge(
             ev,
             seq_col="seq",
@@ -170,7 +168,6 @@ class Replicator:
             epoch=v1,
             mode=self.mode,
             renames=renames or None,
-            salted=self.salted,
         )
         # stamp the watermark — also when the merge was FENCED (a crash
         # between a prior sync's merge and its stamp would otherwise

@@ -142,7 +142,6 @@ def cmd_replay(args) -> int:
         events,
         from_epoch=args.from_epoch,
         to_epoch=args.to_epoch,
-        salted=args.salted,
         epochs=epochs,
     )
     print(json.dumps(res))
@@ -603,7 +602,6 @@ def build_parser() -> argparse.ArgumentParser:
                    help="name=path[:format] lookup dataset for table-lookup")
     r.add_argument("--from-epoch", type=int, default=None)
     r.add_argument("--to-epoch", type=int, default=None)
-    r.add_argument("--salted", action="store_true")
     r.add_argument("--precondition", default=None,
                    help="plugin-level row filter ahead of the recipe "
                         "(JEXL: skip-if-true; SQL: keep-if-true)")

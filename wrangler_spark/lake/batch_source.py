@@ -63,34 +63,22 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-
-_META = "_meta"
-
-
-def _mdir(path: str, branch: str | None) -> str:
-    return (
-        os.path.join(path, _META)
-        if not branch
-        else os.path.join(path, _META, f"branch-{branch}")
-    )
-
-
-def _current_version(mdir: str) -> int:
-    with open(os.path.join(mdir, "VERSION")) as f:
-        return int(f.read().strip())
+from wrangler_spark.lake.table import (
+    _current_version,
+    _load_stats,
+    _read_snapshot,
+    _ref_meta,
+)
 
 
 def _resolve_snapshot(options) -> tuple[dict, str]:
     """Option-resolved snapshot pin (version / tag / asOfTimestamp /
     branch — at most one of the first three), hydrated through the
     metadata log. Pure JSON: runs in the planning worker, no session."""
-    from wrangler_spark.lake.table import _read_snapshot, _version_path
-
     path = options.get("path")
     if not path:
         raise ValueError("lake: option 'path' is required")
-    branch = options.get("branch")
-    mdir = _mdir(path, branch)
+    mdir = _ref_meta(path, options.get("branch"))
     if not os.path.isdir(mdir):
         raise ValueError(f"lake: no table/branch metadata at {mdir}")
     picks = [k for k in ("version", "tag", "asoftimestamp") if options.get(k)]
@@ -119,20 +107,6 @@ def _resolve_snapshot(options) -> tuple[dict, str]:
         v = max(cands)
     snap = head if v is None else _read_snapshot(mdir, v)
     return snap, path
-
-
-def _load_stats(path: str, snap: dict) -> dict:
-    """rel -> per-file footer stats, merged from the snapshot's sidecar
-    manifests (pure JSON — the planning-time working set)."""
-    out: dict = dict(snap.get("stats") or {})  # legacy inline
-    for m in snap.get("stats_manifests") or []:
-        p = os.path.join(path, m["path"])
-        try:
-            with open(p) as f:
-                out.update(json.load(f))
-        except FileNotFoundError:
-            pass  # expired sidecar: files it covered are gone too
-    return out
 
 
 def _can_match(fstats: dict | None, aliases: dict, filters: list) -> bool:

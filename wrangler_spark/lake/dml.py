@@ -46,6 +46,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from wrangler_spark.lake.merge import _BROADCAST_MAX_KEYS
+
 __all__ = ["delete_where", "update_where", "MergeBuilder", "MergeConflictError"]
 
 
@@ -363,10 +365,9 @@ class MergeBuilder:
     the affected buckets, unshuffled when the base read was aligned.
     """
 
-    def __init__(self, table, source: DataFrame, broadcast_keys_max: int = 500_000):
+    def __init__(self, table, source: DataFrame):
         self.table = table
         self.source = source
-        self.broadcast_keys_max = broadcast_keys_max
         self._matched: list[tuple[str, dict | None, object]] = []  # (kind, sets, cond)
         self._insert: tuple[dict | None, object] | None = None
 
@@ -440,7 +441,7 @@ class MergeBuilder:
         #           keys taking the insert clause.
         base, aligned = t._resolved(buckets=affected)
         src = self.source.alias("s")
-        build = F.broadcast(src) if n_src_keys <= self.broadcast_keys_max else src
+        build = F.broadcast(src) if n_src_keys <= _BROADCAST_MAX_KEYS else src
         on = None
         for k in keys:
             c = F.col(f"t.{k}").eqNullSafe(F.col(f"s.{k}"))

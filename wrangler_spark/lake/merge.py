@@ -7,11 +7,14 @@ LWW ordering), rewriting only the hash-buckets that contain changed
 keys.
 
 Scale design notes (the 100 TB story):
-- LWW dedup = max-seq agg over a (keys, seq) projection + join back.
-  Only key+seq bytes flow through the agg shuffle and MAX combines
-  map-side, so hot-key skew collapses before the shuffle; the join
-  back is AQE-broadcastable. (max_by(struct) measured 10× slower —
-  payload copies into the agg buffer per row.)
+- LWW dedup = one max-seq agg over a (keys, seq) projection
+  (`_max_seq`) + an inner join back to the full rows. Only key+seq
+  bytes flow through the agg shuffle, and MAX is algebraic: Spark's
+  HashAggregate runs partial_max in every map task, so a hot key
+  reaches the shuffle as at most one row per task and needs no
+  salting. The join back broadcasts the (keys, max seq) side while the
+  epoch has at most `_BROADCAST_MAX_KEYS` winners. (max_by(struct)
+  measured 10× slower — payload copies into the agg buffer per row.)
 - The base-table side reads ONLY affected buckets (bucket pruning via
   snapshot metadata), and the anti-join of base-vs-changed-keys is
   AQE-planned: epochs with small change sets become broadcast joins at
@@ -48,72 +51,38 @@ from wrangler_spark.lake.table import LakeTable, evolve_schema
 _LOCAL_MOR_MAX_EVENTS = 10_000
 _LOCAL_MOR_MAX_BYTES = 32 << 20
 
+# The Spark-plan merge broadcasts its (keys, max seq) winners up to
+# this many keys, so the payload stream never shuffles; the DML
+# MergeBuilder (lake/dml.py) bounds its broadcast source the same way.
+# Past it (a key-count burst) both take the shuffle join.
+_BROADCAST_MAX_KEYS = 500_000
+
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
 
-def lww_dedup(
-    changes: DataFrame,
-    key_cols: list[str],
-    seq_col: str = "seq",
-    salted: bool = False,
-    salt_buckets: int = 16,
-    unique_seq: bool = True,
-    broadcast_keys_max: int = 0,
-    _handles: list | None = None,
-) -> DataFrame:
-    """One row per key: the change with max seq (last writer wins).
+def _max_seq(changes: DataFrame, key_cols: list[str], seq_col: str) -> DataFrame:
+    """(keys, max seq) per key, aggregated over a (keys, seq) projection
+    — a few dozen bytes per row through the shuffle, combined map-side."""
+    return changes.select(*key_cols, seq_col).groupBy(*key_cols).agg(
+        F.max(seq_col).alias(seq_col)
+    )
 
-    Plan: tiny max-seq aggregation over a (keys, seq) projection, then an
-    equality join back to the full rows. Measured 10× faster than
-    max_by(struct) (which copies the whole payload into the aggregation
-    buffer per row), and it is the scalable shape:
-    - only (keys, seq) — a few dozen bytes/row — flows through the agg
-      shuffle, and MAX combines map-side, so a hot repo with 10^7 updates
-      in an epoch contributes one row per upstream partition (skew-immune
-      without salting);
-    - the join back is AQE-planned: when the distinct-key count is small
-      the max-seq side broadcasts and the full payload never shuffles.
 
-    `salted=True` additionally two-stages the max agg for pathological
-    single-key floods. `unique_seq=False` switches to a window row_number
-    for sources whose (key, seq) pairs can tie (a real binlog's commit
-    sequence is unique, so the default assumes uniqueness).
+def lww_dedup(changes: DataFrame, key_cols: list[str], seq_col: str = "seq") -> DataFrame:
+    """The change with the max seq per key (last writer wins): the
+    `_max_seq` agg joined back to the full rows on (keys, seq).
 
-    `broadcast_keys_max` > 0 enables a manual runtime-stats broadcast:
-    the (keys, max-seq) agg is cached and counted — a job over key+seq
-    bytes only — and when the distinct-key count is at most the bound
-    the join-back build side is broadcast EXPLICITLY. AQE's own
-    SMJ→BHJ conversion decides too late to save the payload stream's
-    shuffle WRITE (both query stages materialize concurrently); the
-    static hint keeps the full payload entirely shuffle-free, which
-    measured ~2× on the whole replay. Caller must unpersist the handle
-    appended to `_handles` after the merge materializes.
+    Measured 10× faster than max_by(struct), which copies the whole
+    payload into the aggregation buffer per row. A hot repo with 10^7
+    updates in an epoch contributes one row per upstream partition to
+    the agg shuffle. The join back is AQE-planned: when the distinct-key
+    count is small the max-seq side broadcasts and the full payload
+    never shuffles. Every row at a key's max seq is kept (a real
+    binlog's commit sequence is unique per key, so ties do not occur).
     """
-    if not unique_seq:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(*key_cols).orderBy(F.desc(seq_col))
-        return (
-            changes.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    proj = changes.select(*key_cols, seq_col)
-    if salted:
-        salt = F.pmod(F.xxhash64(F.col(seq_col)), F.lit(salt_buckets))
-        stage1 = proj.groupBy(*key_cols, salt.alias("__salt")).agg(
-            F.max(seq_col).alias(seq_col)
-        )
-        mx = stage1.groupBy(*key_cols).agg(F.max(seq_col).alias(seq_col))
-    else:
-        mx = proj.groupBy(*key_cols).agg(F.max(seq_col).alias(seq_col))
-    if broadcast_keys_max:
-        mx = mx.cache()
-        if _handles is not None:
-            _handles.append(mx)
-        if mx.count() <= broadcast_keys_max:
-            mx = F.broadcast(mx)
-    return changes.join(mx, on=[*key_cols, seq_col], how="inner")
+    return changes.join(
+        _max_seq(changes, key_cols, seq_col), on=[*key_cols, seq_col], how="inner"
+    )
 
 
 def _batch_metrics(changes: DataFrame, seq_col: str, op_col: str) -> dict:
@@ -302,10 +271,8 @@ def merge_into(
     op_col: str = "op",
     epoch: int | None = None,
     evolve: bool = True,
-    salted: bool = False,
     metrics: dict | None = None,
     renames: dict | None = None,
-    broadcast_keys_max: int = 500_000,
     explain_sink: list | None = None,
     mode: str = "cow",
     staged: bool = False,
@@ -432,27 +399,17 @@ def merge_into(
                 timings, mode="mor",
             )
 
-    # ---- LWW winner per key (salted two-stage hash agg; no window sort).
-    # Shape: tiny max-seq agg over a (keys, seq) projection, cached, then
-    # a join back to the full rows (measured 10× faster than
-    # max_by(struct), which copies the payload into the agg buffer).
-    # The bucket-pruning probe runs on the AGG side, before the payload
-    # join, so it (a) costs only key+seq bytes and (b) yields the EXACT
-    # distinct-key count that gates the static broadcast — no stale
-    # previous-epoch hint can force a huge build side into driver memory
-    # (a key-count burst degrades gracefully to the shuffle join, the
-    # right plan at that size). broadcast keeps the full payload stream
-    # shuffle-free for typical epochs (≤500k keys).
+    # ---- LWW winner per key: the `_max_seq` agg, cached, then a join
+    # back to the full rows (see lww_dedup). The bucket-pruning probe
+    # runs on the AGG side, before the payload join, so it (a) costs
+    # only key+seq bytes and (b) yields the EXACT distinct-key count
+    # that gates the static broadcast — no stale previous-epoch hint can
+    # force a huge build side into driver memory (a key-count burst
+    # degrades gracefully to the shuffle join, the right plan at that
+    # size). broadcast keeps the full payload stream shuffle-free for
+    # typical epochs (≤ _BROADCAST_MAX_KEYS keys).
     _t0 = time.time()
-    proj = changes.select(*keys, seq_col)
-    if salted:
-        salt = F.pmod(F.xxhash64(F.col(seq_col)), F.lit(16))
-        stage1 = proj.groupBy(*keys, salt.alias("__salt")).agg(
-            F.max(seq_col).alias(seq_col)
-        )
-        mx = stage1.groupBy(*keys).agg(F.max(seq_col).alias(seq_col))
-    else:
-        mx = proj.groupBy(*keys).agg(F.max(seq_col).alias(seq_col))
+    mx = _max_seq(changes, keys, seq_col)
     mx = mx.withColumn("__b", table.bucket_expr(mx)).cache()
 
     # ---- bucket pruning probe (≤ num_buckets rows collected) — also the
@@ -462,7 +419,7 @@ def merge_into(
     n_winners = sum(r["count"] for r in bucket_counts)
     _t_probe = time.time() - _t0
 
-    winners_broadcast = n_winners <= broadcast_keys_max
+    winners_broadcast = n_winners <= _BROADCAST_MAX_KEYS
     build = F.broadcast(mx) if winners_broadcast else mx
     # join-back carries __b from the agg side for free
     # Cache the winner payload ONLY when a second action will re-read
@@ -538,11 +495,11 @@ def merge_into(
 
     # seq-guarded merge (`WHEN MATCHED AND s.seq > t.seq`). Two plans:
     #
-    # Broadcast path (n_winners ≤ 500k — the typical epoch): base rows
-    # join ONLY against the broadcast (keys, max-seq) projection, so the
-    # base payload provably never shuffles — bucket alignment holds by
-    # construction, not by hoping AQE picks BHJ for a payload-bearing
-    # side. The changed-row payload (winners that beat the base, plus
+    # Broadcast path (n_winners ≤ _BROADCAST_MAX_KEYS — the typical
+    # epoch): base rows join ONLY against the broadcast (keys, max-seq)
+    # projection, so the base payload provably never shuffles — bucket
+    # alignment holds by construction, not by hoping AQE picks BHJ for a
+    # payload-bearing side. The changed-row payload (winners that beat the base, plus
     # brand-new keys) is the small side and repartitions by bucket once.
     #
     # Degraded path (key-count burst): classic two-join SMJ merge; base

@@ -88,6 +88,33 @@ def _ref_meta(path: str, branch: str | None) -> str:
         return os.path.join(path, _META)
     return os.path.join(path, _META, f"branch-{branch}")
 
+
+def _current_version(mdir: str) -> int:
+    """The version a ref's `VERSION` pointer names (`mdir` from
+    `_ref_meta`)."""
+    with open(os.path.join(mdir, "VERSION")) as f:
+        return int(f.read().strip())
+
+
+def _load_stats(path: str, snap: dict) -> dict:
+    """rel -> per-file footer stats, merged from the snapshot's sidecar
+    manifests (plus legacy inline stats on pre-sidecar snapshots). Pure
+    JSON, no session: the batch `lake` source plans with it too."""
+    out = dict(snap.get("stats") or {})
+    for m in snap.get("stats_manifests") or []:
+        try:
+            with open(os.path.join(path, m["path"])) as f:
+                out.update(json.load(f))
+        except OSError:
+            continue  # expired sidecar: pruning degrades, never errors
+    return out
+
+# A merge-on-read read resolves its pending deltas by broadcasting the
+# delta winners while the pending delta files take at most this many
+# bytes on disk (the common case under any sane compaction cadence);
+# past it, `_resolved` takes the degraded full-key aggregation.
+_MOR_BROADCAST_MAX_BYTES = 64 << 20
+
 # file-stats collection cap: one footer read per file regardless of
 # column count, but the snapshot JSON (the manifest) stores one
 # [min, max, nulls] triple per (file, column) — cap the tracked columns
@@ -671,9 +698,7 @@ class LakeTable:
                 )
             version = max(cands)
         if version is None:
-            vfile = os.path.join(mdir, "VERSION")
-            with open(vfile) as f:
-                version = int(f.read().strip())
+            version = _current_version(mdir)
         return LakeTable(spark, path, _read_snapshot(mdir, version))
 
     @staticmethod
@@ -696,8 +721,7 @@ class LakeTable:
             # optimistic-concurrency guard #1: a stale handle (loaded at
             # an older version) must not roll the table back — its next
             # version number would be ≤ the current pointer
-            with open(vfile) as f:
-                current = int(f.read().strip())
+            current = _current_version(mdir)
             if current >= v:
                 raise CommitConflictError(
                     f"table moved to version {current} since this handle "
@@ -761,13 +785,7 @@ class LakeTable:
         cached = self.__dict__.get("_stats_cache")
         if cached is not None:
             return cached
-        out = dict(self.snap.get("stats", {}))
-        for m in self.snap.get("stats_manifests", []):
-            try:
-                with open(os.path.join(self.path, m["path"])) as f:
-                    out.update(json.load(f))
-            except OSError:
-                continue  # expired sidecar: pruning degrades, never errors
+        out = _load_stats(self.path, self.snap)
         live: set[str] = set()
         for rels in self.snap["files"].values():
             live.update(rels)
@@ -1330,11 +1348,10 @@ class LakeTable:
         exposed; tombstones kept). Returns (df, base_stayed_unshuffled).
 
         Two plans, like the merge itself:
-        - Broadcast path (pending delta bytes ≤ `mor.read.broadcast_bytes`
-          property, default 64 MB on disk — the common case under any
-          sane compaction cadence): delta LWW winners are broadcast and
-          the base payload is filtered/unioned WITHOUT shuffling, so the
-          resolved read costs one base scan + a small-side broadcast.
+        - Broadcast path (pending delta bytes ≤ `_MOR_BROADCAST_MAX_BYTES`
+          on disk): delta LWW winners are broadcast and the base payload
+          is filtered/unioned WITHOUT shuffling, so the resolved read
+          costs one base scan + a small-side broadcast.
         - Degraded path (compaction far behind): (keys, seq, src)
           projection agg + join back — the same skinny-shuffle shape as
           `lww_dedup`; the payload shuffles once, never sorts.
@@ -1354,8 +1371,9 @@ class LakeTable:
         # LWW among the delta rows themselves (several epochs may touch
         # one key): skinny (keys, seq) max-agg + join back — deltas are
         # small, this is cheap and map-side-combining
-        dmx = delta.groupBy(*keys).agg(F.max("__seq").alias("__seq"))
-        dwin = delta.join(dmx, on=[*keys, "__seq"], how="inner")
+        from wrangler_spark.lake.merge import lww_dedup
+
+        dwin = lww_dedup(delta, keys, "__seq")
         # Two delta files can carry the SAME (key, seq) row — e.g. a
         # mor Replicator retry after a crash between merge and watermark
         # stamp replays an overlapping window under a new fencing epoch.
@@ -1364,10 +1382,7 @@ class LakeTable:
         # into the base. CoW is immune via its strict s.seq > t.seq
         # guard — keep MoR's resolved state identical.
         dwin = dwin.dropDuplicates(keys)
-        limit = int(
-            self.snap.get("properties", {}).get("mor.read.broadcast_bytes", 64 << 20)
-        )
-        if self.delta_bytes(buckets) <= limit:
+        if self.delta_bytes(buckets) <= _MOR_BROADCAST_MAX_BYTES:
             # Round 5: materialize the delta-winner subtree ONCE. It
             # feeds three branches of the resolved plan (the broadcast
             # key set, the base-keep join, and the delta-take side), and
@@ -1376,7 +1391,7 @@ class LakeTable:
             # delta scan + max-seq agg up to 4× (BENCH_r04
             # mor_sparse_epoch: 4.76 s vs 0.51 s cow on 683K rows).
             # Bounded memory: this path only runs when pending delta
-            # bytes ≤ the broadcast limit (default 64 MB).
+            # bytes ≤ _MOR_BROADCAST_MAX_BYTES.
             dwin = dwin.localCheckpoint(eager=True)
             dkeys = F.broadcast(
                 dwin.select(
@@ -1691,10 +1706,8 @@ class LakeTable:
         op_col: str = "op",
         epoch: int | None = None,
         evolve: bool = True,
-        salted: bool = False,
         metrics: dict | None = None,
         renames: dict | None = None,
-        broadcast_keys_max: int = 500_000,
         explain_sink: list | None = None,
         mode: str = "cow",
         staged: bool = False,
@@ -1703,10 +1716,8 @@ class LakeTable:
 
         return merge_into(
             self, changes, seq_col=seq_col, op_col=op_col, epoch=epoch,
-            evolve=evolve, salted=salted, metrics=metrics,
-            renames=renames,
-            broadcast_keys_max=broadcast_keys_max, explain_sink=explain_sink,
-            mode=mode, staged=staged,
+            evolve=evolve, metrics=metrics, renames=renames,
+            explain_sink=explain_sink, mode=mode, staged=staged,
         )
 
     def upsert(self, df: DataFrame, mode: str = "cow") -> dict:

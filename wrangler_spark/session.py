@@ -28,7 +28,8 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         # AQE: runtime coalescing + skew-join splitting — the hot-repo skew
-        # answer at 100 TB alongside explicit salting in lake/merge.py.
+        # answer at 100 TB alongside the map-side max-seq agg in
+        # lake/merge.py.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
