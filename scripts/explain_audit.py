@@ -157,8 +157,10 @@ def main() -> None:
     sections.append((
         "MERGE INTO — broadcast (steady-state) path",
         "The base-table scan joins ONLY against the broadcast (keys, "
-        "max-seq) projection (BroadcastHashJoin with the base on the "
-        "streamed side) — the base payload provably never shuffles; the "
+        "__seq) projection of the batch's LWW winners, collapsed to one "
+        "row per key and materialized once (the `Scan ExistingRDD` "
+        "checkpoint; BroadcastHashJoin with the base on the streamed "
+        "side) — the base payload provably never shuffles; the "
         "changed-row side (bounded by the epoch's distinct keys) is the "
         "only Exchange before the bucket-partitioned write, and it is a "
         "plain `Scan parquet` of THIS commit's already-written "
@@ -181,12 +183,15 @@ def main() -> None:
         tbl.merge(upd2, epoch=2, explain_sink=sink2)
     sections.append((
         "MERGE INTO — degraded (key-count burst) path",
-        "Past the broadcast bound the merge degrades to the classic "
-        "two-join merge (base LEFT JOIN winners, winners ANTI JOIN base "
-        "keys) with no broadcast hint — the correct plan when the change "
-        "set is itself huge, where both joins become SortMergeJoins on "
-        "keys — and the write re-clusters by bucket. At this audit's "
-        "10-key size the planner still broadcasts both small sides.",
+        "Past the broadcast bound the merge runs the same overlay plan "
+        "as the steady-state path without its hints or the winners' "
+        "checkpoint, so the planner picks each join, and the write "
+        "re-clusters by bucket (the union below has no Exchange of its "
+        "own), since the base side may have shuffled. Printed is AQE's "
+        "initial plan: the collapsed winners' size is unknown before "
+        "they run, so the base join plans as a SortMergeJoin on keys, "
+        "which AQE may turn into a broadcast join at run time once it "
+        "has measured a small side.",
         sink2[0],
     ))
 
@@ -217,7 +222,7 @@ def main() -> None:
         "shuffles; the union's delta side is bounded by the pending "
         "delta volume, which compaction caps. Base wins seq ties — the "
         "same strict guard as the cow merge."
-        + ("" if aligned else " [UNEXPECTED: degraded path taken]"),
+        + ("" if aligned else " [UNEXPECTED: unhinted plan taken]"),
         plan_of(resolved),
     ))
 

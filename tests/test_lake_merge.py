@@ -280,6 +280,26 @@ def test_degraded_shuffle_merge_path(spark, table, monkeypatch):
     }
 
 
+@pytest.mark.parametrize("max_keys", [500_000, 0], ids=["broadcast", "unhinted"])
+def test_redelivered_event_stores_one_row(spark, table, monkeypatch, max_keys):
+    """A copy-on-write batch holding the same (key, seq) event twice (a
+    redelivery) stores one row for the key, with the broadcast hints and
+    past the key bound, and a later update still leaves one row."""
+    from wrangler_spark.lake import merge as merge_mod
+
+    monkeypatch.setattr(merge_mod, "_BROADCAST_MAX_KEYS", max_keys)
+    ev = (1, "insert", "r1", "a.py", "c1", "python", "v1")
+    res = table.merge(ch(spark, [ev, ev, (2, "insert", "r2", "b.py", "c2", "python", "v2")]), epoch=0)
+    assert res["timings"]["broadcast_path"] is (max_keys > 0)
+
+    def rows():
+        return sorted((r["repo"], r["path"], r["content"]) for r in table.read().collect())
+
+    assert rows() == [("r1", "a.py", "v1"), ("r2", "b.py", "v2")]
+    table.merge(ch(spark, [(3, "update", "r1", "a.py", "c3", "python", "v3")]), epoch=1)
+    assert rows() == [("r1", "a.py", "v3"), ("r2", "b.py", "v2")]
+
+
 def test_history_and_rollback(spark, tmp_path):
     """history() lists retained commits newest-first with operations
     and timestamps (Iceberg snapshots table / DESCRIBE HISTORY shape);

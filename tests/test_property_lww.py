@@ -1,7 +1,9 @@
 """Property-based check of the LWW merge (hypothesis): for ANY sequence
-of insert/update/delete events with unique seqs, split arbitrarily into
-epochs, the table's final state equals a per-key fold of the events by
-seq — the reference-semantics oracle computed in plain Python."""
+of insert/update/delete events with unique seqs, some of them
+redelivered as identical copies, split arbitrarily into epochs, the
+table's final state equals a per-key fold of the events by seq — the
+reference-semantics oracle computed in plain Python — with one row per
+key."""
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -23,6 +25,11 @@ def event_log(draw):
         k = draw(st.sampled_from(KEYS))
         op = draw(st.sampled_from(["insert", "update", "delete"]))
         events.append((s, op, k[0], k[1], f"c{s}", "python", f"v{s}"))
+    # redeliveries: identical copies placed anywhere, so a copy lands in
+    # its original's batch or in another one
+    for i in draw(st.lists(st.integers(0, n - 1), min_size=1, max_size=4)):
+        events.insert(draw(st.integers(0, len(events))), events[i])
+    n = len(events)
     cuts = draw(st.lists(st.integers(0, n), max_size=3))
     bounds = sorted(set([0, n, *cuts]))
     batches = [events[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
@@ -38,6 +45,15 @@ def _fold(events):
     return {
         k: v[2] for k, v in state.items() if v[1] != "delete"
     }
+
+
+def _want(events):
+    return sorted((*k, v) for k, v in _fold(events).items())
+
+
+def _rows(df):
+    """(repo, path, content) of every row — a key stored twice shows."""
+    return sorted((r["repo"], r["path"], r["content"]) for r in df.collect())
 
 
 @settings(
@@ -63,10 +79,7 @@ def test_lww_merge_matches_python_fold(spark, tmp_path_factory, log):
             "seq long, op string, repo string, path string, commit string, lang string, content string",
         )
         table.merge(df, epoch=i)
-    got = {
-        (r["repo"], r["path"]): r["content"] for r in table.read().collect()
-    }
-    assert got == _fold(events)
+    assert _rows(table.read()) == _want(events)
 
 
 @settings(
@@ -101,7 +114,7 @@ def test_mor_arrow_resolution_matches_python_fold(spark, tmp_path_factory, log):
         assert plan["driver_keys"] is not None and len(rows) <= 1
         got.update({(r["repo"], r["path"]): r["content"] for r in rows})
     assert got == want
-    assert {(r["repo"], r["path"]): r["content"] for r in read_lake(spark, table.path).collect()} == want
+    assert _rows(read_lake(spark, table.path)) == _want(events)
 
 
 def test_mor_arrow_resolution_matches_python_fold_spark_path(spark, tmp_path_factory, monkeypatch):

@@ -110,8 +110,10 @@ def expected_final_state(events: DataFrame, key_cols=("repo", "path")) -> DataFr
     """Replay oracle: the final table state implied by ALL events at once
     (global LWW, ignoring epoch boundaries). Used by tests to verify that
     epoch-by-epoch replay — from any checkpoint — converges to the same
-    rows (per-row content sha256 equality)."""
+    rows (per-row content sha256 equality). One row per key: tied
+    copies of a key's winning event (a redelivery) collapse, as they do
+    in the table."""
     from wrangler_spark.lake.merge import lww_dedup
 
-    winners = lww_dedup(events, list(key_cols), seq_col="seq")
+    winners = lww_dedup(events, list(key_cols), seq_col="seq").dropDuplicates(list(key_cols))
     return winners.filter(F.col("op") != "delete").drop("op", "seq", "epoch", "source_partition")

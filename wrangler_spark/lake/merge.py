@@ -16,9 +16,11 @@ Scale design notes (the 100 TB story):
   epoch has at most `_BROADCAST_MAX_KEYS` winners. (max_by(struct)
   measured 10× slower — payload copies into the agg buffer per row.)
 - The base-table side reads ONLY affected buckets (bucket pruning via
-  snapshot metadata), and the anti-join of base-vs-changed-keys is
-  AQE-planned: epochs with small change sets become broadcast joins at
-  runtime without us collecting anything.
+  snapshot metadata). The winners overlay it by one rule, `lww_overlay`
+  (strictly newer seq wins, the base wins ties, tied copies collapse),
+  which the merge-on-read read and the changelog share. One plan: up
+  to `_BROADCAST_MAX_KEYS` winners it carries broadcast hints, so the
+  base payload never shuffles; past it the planner picks the joins.
 - Deletes are LWW winners with op='delete': the key simply doesn't
   reappear in the rewritten bucket.
 - A merge-on-read batch of at most `_LOCAL_MOR_MAX_EVENTS` rows and
@@ -30,6 +32,7 @@ Scale design notes (the 100 TB story):
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame
@@ -54,7 +57,7 @@ _LOCAL_MOR_MAX_BYTES = 32 << 20
 # The Spark-plan merge broadcasts its (keys, max seq) winners up to
 # this many keys, so the payload stream never shuffles; the DML
 # MergeBuilder (lake/dml.py) bounds its broadcast source the same way.
-# Past it (a key-count burst) both take the shuffle join.
+# Past it (a key-count burst) both run the same plan without hints.
 _BROADCAST_MAX_KEYS = 500_000
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -77,12 +80,56 @@ def lww_dedup(changes: DataFrame, key_cols: list[str], seq_col: str = "seq") -> 
     updates in an epoch contributes one row per upstream partition to
     the agg shuffle. The join back is AQE-planned: when the distinct-key
     count is small the max-seq side broadcasts and the full payload
-    never shuffles. Every row at a key's max seq is kept (a real
-    binlog's commit sequence is unique per key, so ties do not occur).
+    never shuffles. Every row at a key's max seq is kept: a redelivered
+    event leaves tied copies, which `lww_overlay` collapses.
     """
     return changes.join(
         _max_seq(changes, key_cols, seq_col), on=[*key_cols, seq_col], how="inner"
     )
+
+
+def lww_overlay(
+    base: DataFrame, winners: DataFrame, key_cols: list[str], broadcast: bool = False
+) -> tuple[DataFrame, DataFrame]:
+    """The LWW overlay of per-key `winners` (rows at their key's max
+    `__seq`, as `lww_dedup` leaves them) onto `base` (one row per key),
+    both carrying `__seq`: returns (the base rows that survive, the
+    winners taken), each in its own columns.
+
+    A winner is taken when its key is absent from the base or its
+    `__seq` is strictly greater (`WHEN MATCHED AND s.seq > t.seq`): the
+    base wins ties, and tied winner copies (a redelivered event)
+    collapse to one row. The base joins only a (keys, __seq) projection
+    of the winners, and the winners only the keys the base beat, so no
+    payload joins a payload.
+
+    `broadcast`, for winners a caller's size gate bounds, materializes
+    the collapsed winners once (three branches of the plan read them,
+    and exchange reuse does not cover their differing projections) and
+    hints both winner-sized sides, which keeps the base side unshuffled
+    and so bucket-aligned. It changes no row."""
+    hint = F.broadcast if broadcast else (lambda df: df)
+    winners = winners.dropDuplicates(key_cols)
+    if broadcast:
+        winners = winners.localCheckpoint(eager=True)
+    wk = winners.select(
+        *[F.col(k).alias(f"__d_{k}") for k in key_cols], F.col("__seq").alias("__d_seq")
+    )
+    cond = None
+    for k in key_cols:
+        c = F.col(k).eqNullSafe(F.col(f"__d_{k}"))
+        cond = c if cond is None else (cond & c)
+    bj = base.join(hint(wk), cond, "left")
+    newer = F.col("__d_seq").isNotNull() & (F.col("__d_seq") > F.col("__seq"))
+    base_keep = bj.filter(~F.coalesce(newer, F.lit(False))).select(base.columns)
+    # winner keys the base beat, bounded by the winners; Catalyst prunes
+    # this second base scan to keys + __seq. The LWW join-back drops
+    # null keys, so the plain equi-join matches every loser.
+    losers = bj.filter(F.coalesce(F.col("__d_seq") <= F.col("__seq"), F.lit(False))).select(
+        *[F.col(f"__d_{k}").alias(k) for k in key_cols]
+    )
+    taken = winners.join(hint(losers), on=key_cols, how="left_anti")
+    return base_keep, taken
 
 
 def _batch_metrics(changes: DataFrame, seq_col: str, op_col: str) -> dict:
@@ -296,6 +343,12 @@ def merge_into(
     resolves them in its base read and clears them for the buckets it
     rewrites.
 
+    The cow merge overlays the batch's LWW winners on the affected base
+    buckets with `lww_overlay`, broadcasting the winner sides while the
+    batch has at most `_BROADCAST_MAX_KEYS` winner keys
+    (`broadcast_path` in the timings) and running the same plan
+    unhinted past it; a redelivered (key, seq) event stores one row.
+
     A mor batch of at most `_LOCAL_MOR_MAX_EVENTS` rows and
     `_LOCAL_MOR_MAX_BYTES` Arrow bytes commits from the driver: one
     Arrow collect of the aligned batch (cut one row past the row
@@ -422,16 +475,7 @@ def merge_into(
     winners_broadcast = n_winners <= _BROADCAST_MAX_KEYS
     build = F.broadcast(mx) if winners_broadcast else mx
     # join-back carries __b from the agg side for free
-    # Cache the winner payload ONLY when a second action will re-read
-    # it: the degraded shuffle merge consumes it twice (merge join +
-    # brand-new anti-join) inside the bucket write on top of the CDF
-    # write. The broadcast and mor paths consume it exactly once (the
-    # CDF write feeds the merge union back via the written files), so
-    # caching there would materialize an epoch-sized payload in executor
-    # memory for zero reuse — a spill hazard at large epochs.
     winners = changes.join(build, on=[*keys, seq_col], how="inner")
-    if not winners_broadcast and mode != "mor":
-        winners = winners.cache()
 
     # ---- metrics on the change batch (precomputed by the replayer's
     # watermark agg when available; one small agg job otherwise)
@@ -473,7 +517,6 @@ def merge_into(
         if callable(metrics):
             metrics = metrics()
         sc = _commit_mor(table, delta_files, metrics, epoch, schema, aliases, staged)
-        winners.unpersist()
         mx.unpersist()
         timings = {
             "probe_sec": round(_t_probe, 3),
@@ -493,87 +536,16 @@ def merge_into(
     base_aligned = _align(base, schema, aliases, [F.col("__seq"), F.col("__deleted")])
     base_aligned = base_aligned.withColumn("__b", table.bucket_expr(base_aligned))
 
-    # seq-guarded merge (`WHEN MATCHED AND s.seq > t.seq`). Two plans:
-    #
-    # Broadcast path (n_winners ≤ _BROADCAST_MAX_KEYS — the typical
-    # epoch): base rows join ONLY against the broadcast (keys, max-seq)
-    # projection, so the base payload provably never shuffles — bucket
-    # alignment holds by construction, not by hoping AQE picks BHJ for a
-    # payload-bearing side. The changed-row payload (winners that beat the base, plus
-    # brand-new keys) is the small side and repartitions by bucket once.
-    #
-    # Degraded path (key-count burst): classic two-join SMJ merge; base
-    # rows shuffle on keys, so the write explicitly re-clusters by
-    # bucket (without it, every write task would span many buckets and
-    # emit tasks × buckets small files per version).
-    data_cols = [f.name for f in schema.fields]
-    mxk = mx.select(
-        *[F.col(k).alias(f"__w_{k}") for k in keys],
-        F.col(seq_col).cast("long").alias("__w_seq"),
+    # seq-guarded merge (`WHEN MATCHED AND s.seq > t.seq`, lww_overlay):
+    # under the key bound the collapsed winners are materialized once
+    # for the change-file and bucket writes and their sides broadcast,
+    # so the base payload never shuffles and stays bucket-aligned; past
+    # it (a key-count burst) the same plan runs unhinted and the write
+    # re-clusters by bucket (without it, every write task would span
+    # many buckets and emit tasks × buckets small files per version).
+    base_keep, changed = lww_overlay(
+        base_aligned, changes_aligned, keys, broadcast=winners_broadcast
     )
-    join_cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"__w_{k}"))
-        join_cond = c if join_cond is None else (join_cond & c)
-
-    if winners_broadcast:
-        bj = base_aligned.join(F.broadcast(mxk), join_cond, "left")
-        newer = F.col("__w_seq").isNotNull() & (F.col("__w_seq") > F.col("__seq"))
-        # base rows that survive (no change, or a stale change)
-        base_keep = bj.filter(~F.coalesce(newer, F.lit(False))).select(
-            *keys, *[c for c in data_cols if c not in keys], "__seq", "__deleted", "__b"
-        )
-        # keys where the base won (stale change) — bounded by n_winners;
-        # Catalyst prunes this second base scan to keys+__seq only
-        losers = bj.filter(F.coalesce(F.col("__w_seq") <= F.col("__seq"), F.lit(False))).select(
-            *[F.col(f"__w_{k}").alias(f"__l_{k}") for k in keys]
-        )
-        lose_cond = None
-        for k in keys:
-            c = F.col(k).eqNullSafe(F.col(f"__l_{k}"))
-            lose_cond = c if lose_cond is None else (lose_cond & c)
-        changed = changes_aligned.join(F.broadcast(losers), lose_cond, "left_anti").select(
-            *keys, *[c for c in data_cols if c not in keys], "__seq", "__deleted", "__b"
-        )
-        merged = base_keep.unionByName(changed.repartition(F.col("__b")))
-        pre_partitioned = True
-        post_image = changed  # winners that actually beat the base
-    else:
-        w = changes_aligned.select(
-            *[F.col(k).alias(f"__w_{k}") for k in keys],
-            *[F.col(c).alias(f"__wv_{c}") for c in data_cols if c not in keys],
-            F.col("__seq").alias("__w_seq"),
-            F.col("__deleted").alias("__w_deleted"),
-        )
-        joined = base_aligned.join(w, join_cond, "left")
-        newer = F.col("__w_seq").isNotNull() & (F.col("__w_seq") > F.col("__seq"))
-        resolved_cols = [F.col(k) for k in keys]
-        for c in data_cols:
-            if c not in keys:
-                resolved_cols.append(
-                    F.when(newer, F.col(f"__wv_{c}")).otherwise(F.col(c)).alias(c)
-                )
-        resolved_cols.append(F.when(newer, F.col("__w_seq")).otherwise(F.col("__seq")).alias("__seq"))
-        resolved_cols.append(
-            F.when(newer, F.col("__w_deleted")).otherwise(F.col("__deleted")).alias("__deleted")
-        )
-        resolved_cols.append(F.col("__b"))
-        existing = joined.select(*resolved_cols)
-        brand_new = changes_aligned.join(
-            base_aligned.select(*keys), on=keys, how="left_anti"
-        ).select(*keys, *[F.col(c) for c in data_cols if c not in keys], "__seq", "__deleted", "__b")
-        merged = existing.unionByName(brand_new)
-        pre_partitioned = False
-        # post-image for the change manifest: drop candidates the base
-        # beat (Catalyst prunes this base probe to keys + __seq)
-        stale_keys = (
-            base_aligned.join(
-                w.select(*[F.col(f"__w_{k}") for k in keys], "__w_seq"), join_cond
-            )
-            .filter(F.col("__w_seq") <= F.col("__seq"))
-            .select(*keys)
-        )
-        post_image = changes_aligned.join(stale_keys, on=keys, how="left_anti")
 
     new_version = table.version + 1
     _t1 = time.time()
@@ -588,55 +560,47 @@ def merge_into(
     # not carry them. (mor change files remain within-batch winners by
     # construction; their guard lives at read time.)
     #
-    # Written BEFORE the bucket write, and in the broadcast path the
-    # bucket write's union re-reads the (winners-sized) change files
-    # instead of recomputing their lineage: capturing the changelog
-    # costs one small parquet round-trip, not a second column-pruned
-    # base scan + anti-join per epoch. An interrupted merge leaves
-    # them as unreferenced staging files — the commit below is what
-    # publishes them; GC reclaims orphans.
-    change_rels: list[str] | None
+    # Written BEFORE the bucket write, and the bucket write's union
+    # re-reads the (winners-sized) change files instead of recomputing
+    # their lineage: capturing the changelog costs one small parquet
+    # round-trip, not a second column-pruned base scan + anti-join per
+    # epoch. An interrupted merge leaves them as unreferenced staging
+    # files — the commit below is what publishes them; GC reclaims
+    # orphans.
+    change_rels: list[str] | None = None
     if str(table.snap.get("properties", {}).get("changelog.enabled", "true")).lower() != "false":
-        change_rels = table.write_change_files(post_image, new_version)
+        change_rels = table.write_change_files(changed, new_version)
+        # Read-after-write assumption (documented, round-4 ADVICE): the
+        # bucket write re-reads change files this same merge just
+        # wrote, so the table store must be read-after-write consistent
+        # for new objects — true of the local/posix FS this lake targets
+        # and of S3/GCS since 2020/always. A torn write cannot pass
+        # silently: parquet footer validation fails the read, and
+        # write_change_files raises on write failure, so the epoch
+        # aborts unfenced (replayable) rather than dropping changed rows.
+        # A fully-stale epoch (zero winners beat the base) wrote no
+        # change files, and has nothing to union.
+        changed = None
+        if change_rels:
+            cdf_schema = T.StructType(
+                list(schema.fields)
+                + [
+                    T.StructField("__seq", T.LongType()),
+                    T.StructField("__deleted", T.BooleanType()),
+                ]
+            )
+            changed = table.spark.read.schema(cdf_schema).parquet(
+                *[os.path.join(table.path, r) for r in change_rels]
+            )
+            changed = changed.withColumn("__b", table.bucket_expr(changed))
+    merged = base_keep
+    if changed is not None:
+        # the broadcast plan's base side is bucket-aligned already:
+        # cluster only the changed rows (the write clusters all rows
+        # otherwise)
         if winners_broadcast:
-            if change_rels:
-                import os as _os
-
-                from pyspark.sql import types as _T
-
-                cdf_schema = _T.StructType(
-                    list(schema.fields)
-                    + [
-                        _T.StructField("__seq", _T.LongType()),
-                        _T.StructField("__deleted", _T.BooleanType()),
-                    ]
-                )
-                # Read-after-write assumption (documented, round-4
-                # ADVICE): the bucket write re-reads change files this
-                # same merge just wrote, so the table store must be
-                # read-after-write consistent for new objects — true of
-                # the local/posix FS this lake targets and of S3/GCS
-                # since 2020/always. A torn write cannot pass silently:
-                # parquet footer validation fails the read, and
-                # write_change_files raises on write failure, so the
-                # epoch aborts unfenced (replayable) rather than
-                # dropping changed rows.
-                changed_back = table.spark.read.schema(cdf_schema).parquet(
-                    *[_os.path.join(table.path, r) for r in change_rels]
-                )
-                changed_back = changed_back.withColumn(
-                    "__b", table.bucket_expr(changed_back)
-                )
-                merged = base_keep.unionByName(
-                    changed_back.repartition(F.col("__b"))
-                )
-            else:
-                # fully-stale epoch: zero winners beat the base — no
-                # change files were produced, so don't re-derive the
-                # (empty) changed side from the batch a second time
-                merged = base_keep
-    else:
-        change_rels = None
+            changed = changed.repartition(F.col("__b"))
+        merged = base_keep.unionByName(changed)
     if explain_sink is not None:
         # plan-audit hook (scripts/explain_audit.py → PLANS.md): the
         # formatted physical plan of the merge output as WRITTEN —
@@ -649,7 +613,7 @@ def merge_into(
         with _rs(_buf):
             merged.explain("formatted")
         explain_sink.append(_buf.getvalue())
-    bucket_files = table.write_buckets(merged, new_version, pre_partitioned=pre_partitioned)
+    bucket_files = table.write_buckets(merged, new_version, pre_partitioned=winners_broadcast)
     _t_write = time.time() - _t1
     # buckets that were affected but ended up empty (all keys deleted)
     for b in affected:
@@ -665,7 +629,6 @@ def merge_into(
         schema=schema, aliases=aliases, clear_delta_buckets=affected,
         change_files=change_rels, operation="merge", staged=staged,
     )
-    winners.unpersist()
     mx.unpersist()
 
     timings = {

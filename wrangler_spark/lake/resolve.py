@@ -28,9 +28,30 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 from pyspark.sql import types as T
 
-from wrangler_spark.streaming.change_source import _arrow_type
-
 META_FIELDS = [pa.field("__seq", pa.int64()), pa.field("__deleted", pa.bool_())]
+
+_ARROW_TYPES = {
+    T.StringType(): pa.string(),
+    T.LongType(): pa.int64(),
+    T.IntegerType(): pa.int32(),
+    T.ShortType(): pa.int16(),
+    T.ByteType(): pa.int8(),
+    T.DoubleType(): pa.float64(),
+    T.FloatType(): pa.float32(),
+    T.BooleanType(): pa.bool_(),
+    T.BinaryType(): pa.binary(),
+    T.DateType(): pa.date32(),
+    T.TimestampType(): pa.timestamp("us", tz="UTC"),
+}
+
+
+def _arrow_type(dt: T.DataType) -> pa.DataType:
+    """The Arrow type the lake's Arrow readers use for a Spark column
+    type; ValueError for types without one (nested types)."""
+    got = _ARROW_TYPES.get(dt)
+    if got is None:
+        raise ValueError(f"no Arrow mapping for column type {dt.simpleString()}")
+    return got
 
 
 def arrow_supported(schema: T.StructType) -> bool:

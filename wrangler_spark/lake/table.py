@@ -112,7 +112,7 @@ def _load_stats(path: str, snap: dict) -> dict:
 # A merge-on-read read resolves its pending deltas by broadcasting the
 # delta winners while the pending delta files take at most this many
 # bytes on disk (the common case under any sane compaction cadence);
-# past it, `_resolved` takes the degraded full-key aggregation.
+# past it, `_resolved` runs the same overlay plan without the hints.
 _MOR_BROADCAST_MAX_BYTES = 64 << 20
 
 # file-stats collection cap: one footer read per file regardless of
@@ -543,10 +543,32 @@ def _hydrate(mdir: str, snap: dict) -> dict:
     return out
 
 
+def _read_version(mdir: str, v: int) -> dict:
+    """Version `v` of a ref as written: a metadata diff stays a diff
+    (its schema, properties and change manifest are inline)."""
+    with open(_version_path(mdir, v)) as f:
+        return json.load(f)
+
+
 def _read_snapshot(mdir: str, version: int) -> dict:
     """One hydrated snapshot from disk."""
-    with open(_version_path(mdir, version)) as f:
-        return _hydrate(mdir, json.load(f))
+    return _hydrate(mdir, _read_version(mdir, version))
+
+
+def _window_changes(mdir: str, lo: int, hi: int) -> list[str] | None:
+    """The change-data manifests of a ref's versions lo+1..hi, in commit
+    order; None when one of them is gone or recorded none (the window's
+    change set is unknown)."""
+    rels: list[str] = []
+    for v in range(lo + 1, hi + 1):
+        try:
+            ch = _read_version(mdir, v).get("changes")
+        except FileNotFoundError:
+            return None
+        if ch is None:
+            return None
+        rels.extend(ch)
+    return rels
 
 
 def evolve_schema(
@@ -744,7 +766,7 @@ class LakeTable:
         # guard #2: two writers racing from the SAME base version — the
         # exclusive create of version-N.json is the CAS; exactly one wins
         _atomic_create(
-            os.path.join(mdir, f"version-{v:06d}.json"),
+            _version_path(mdir, v),
             json.dumps(payload, indent=1),
         )
         _atomic_write(vfile, str(v))
@@ -1347,16 +1369,17 @@ class LakeTable:
         """Base ∪ pending deltas, resolved to one row per key (metadata
         exposed; tombstones kept). Returns (df, base_stayed_unshuffled).
 
-        Two plans, like the merge itself:
-        - Broadcast path (pending delta bytes ≤ `_MOR_BROADCAST_MAX_BYTES`
-          on disk): delta LWW winners are broadcast and the base payload
-          is filtered/unioned WITHOUT shuffling, so the resolved read
-          costs one base scan + a small-side broadcast.
-        - Degraded path (compaction far behind): (keys, seq, src)
-          projection agg + join back — the same skinny-shuffle shape as
-          `lww_dedup`; the payload shuffles once, never sorts.
-        Base wins seq ties (strict `delta.__seq > base.__seq`), matching
-        the copy-on-write merge's `WHEN MATCHED AND s.seq > t.seq`.
+        The delta rows' LWW winners (`lww_dedup`) overlay the base
+        (`lww_overlay`): base wins seq ties (strict `delta.__seq >
+        base.__seq`, the copy-on-write merge's `WHEN MATCHED AND s.seq >
+        t.seq`), and tied delta copies collapse to one row — two delta
+        files can carry the same (key, seq) row, e.g. a mor Replicator
+        retry after a crash between merge and watermark stamp replays an
+        overlapping window under a new fencing epoch. While the pending
+        delta files take at most `_MOR_BROADCAST_MAX_BYTES` on disk, the
+        winners are materialized once and broadcast, so the base payload
+        is scanned once and never shuffles; past it (compaction far
+        behind) the same plan runs unhinted.
         """
         if base_files is not None:
             files = base_files  # scan path: stats-pruned file list
@@ -1366,76 +1389,18 @@ class LakeTable:
         dfiles = self.delta_files(buckets)
         if not dfiles:
             return base, True
-        keys = self.key_cols
-        delta = self._read_files(dfiles, schema=schema, aliases=aliases)
-        # LWW among the delta rows themselves (several epochs may touch
-        # one key): skinny (keys, seq) max-agg + join back — deltas are
-        # small, this is cheap and map-side-combining
-        from wrangler_spark.lake.merge import lww_dedup
+        from wrangler_spark.lake.merge import lww_dedup, lww_overlay
 
-        dwin = lww_dedup(delta, keys, "__seq")
-        # Two delta files can carry the SAME (key, seq) row — e.g. a
-        # mor Replicator retry after a crash between merge and watermark
-        # stamp replays an overlapping window under a new fencing epoch.
-        # The max-seq join keeps every tied copy; without this dedupe
-        # read()/scan() emit duplicate rows and compact() bakes them
-        # into the base. CoW is immune via its strict s.seq > t.seq
-        # guard — keep MoR's resolved state identical.
-        dwin = dwin.dropDuplicates(keys)
-        if self.delta_bytes(buckets) <= _MOR_BROADCAST_MAX_BYTES:
-            # Round 5: materialize the delta-winner subtree ONCE. It
-            # feeds three branches of the resolved plan (the broadcast
-            # key set, the base-keep join, and the delta-take side), and
-            # exchange reuse does not cover the differing projections —
-            # measured pre-compaction resolved reads recomputed the
-            # delta scan + max-seq agg up to 4× (BENCH_r04
-            # mor_sparse_epoch: 4.76 s vs 0.51 s cow on 683K rows).
-            # Bounded memory: this path only runs when pending delta
-            # bytes ≤ _MOR_BROADCAST_MAX_BYTES.
-            dwin = dwin.localCheckpoint(eager=True)
-            dkeys = F.broadcast(
-                dwin.select(
-                    *[F.col(k).alias(f"__d_{k}") for k in keys],
-                    F.col("__seq").alias("__d_seq"),
-                )
-            )
-            cond = None
-            for k in keys:
-                c = F.col(k).eqNullSafe(F.col(f"__d_{k}"))
-                cond = c if cond is None else (cond & c)
-            bj = base.join(dkeys, cond, "left")
-            newer = F.col("__d_seq").isNotNull() & (F.col("__d_seq") > F.col("__seq"))
-            base_keep = bj.filter(~F.coalesce(newer, F.lit(False))).select(base.columns)
-            # delta keys the base beat (stale cross-batch rows) — bounded
-            # by the broadcast size; Catalyst prunes this second base
-            # scan to keys+__seq only
-            losers = F.broadcast(
-                bj.filter(F.coalesce(F.col("__d_seq") <= F.col("__seq"), F.lit(False))).select(
-                    *[F.col(f"__d_{k}").alias(k) for k in keys]
-                )
-            )
-            dtake = dwin.join(losers, on=keys, how="left_anti").select(base.columns)
-            return base_keep.unionByName(dtake), True
-        # degraded: full-table key resolution; __src=1 for base so the
-        # struct max prefers base on a seq tie
-        allr = base.withColumn("__src", F.lit(1)).unionByName(
-            dwin.withColumn("__src", F.lit(0))
+        delta = self._read_files(dfiles, schema=schema, aliases=aliases)
+        # the broadcast plan materializes the delta winners once; without
+        # it, pre-compaction resolved reads recomputed the delta scan +
+        # max-seq agg up to 4× (BENCH_r04 mor_sparse_epoch: 4.76 s vs
+        # 0.51 s cow on 683K rows)
+        small = self.delta_bytes(buckets) <= _MOR_BROADCAST_MAX_BYTES
+        base_keep, taken = lww_overlay(
+            base, lww_dedup(delta, self.key_cols, "__seq"), self.key_cols, broadcast=small
         )
-        mx = allr.groupBy(*keys).agg(F.max(F.struct("__seq", "__src")).alias("__m"))
-        win = allr.join(
-            mx.select(
-                *keys,
-                F.col("__m.__seq").alias("__seq"),
-                F.col("__m.__src").alias("__src"),
-            ),
-            on=[*keys, "__seq", "__src"],
-            how="inner",
-        )
-        # same duplicate-delta-at-tied-seq guard as the broadcast path
-        # (base rows are unique per key by the table invariant, so this
-        # only collapses tied delta copies)
-        win = win.dropDuplicates(keys)
-        return win.drop("__src"), False
+        return base_keep.unionByName(taken), small
 
     def write_buckets(
         self,
@@ -2013,11 +1978,7 @@ class LakeTable:
         and never move (Iceberg tags are immutable refs; re-pointing
         requires drop + re-create)."""
         v = self.version if version is None else int(version)
-        if not os.path.exists(
-            os.path.join(
-                _ref_meta(self.path, self.snap.get("branch")), f"version-{v:06d}.json"
-            )
-        ):
+        if not os.path.exists(_version_path(_ref_meta(self.path, self.snap.get("branch")), v)):
             raise ValueError(f"version {v} is not retained; cannot tag it")
         tags = dict(self.snap.get("tags", {}))
         if name in tags:
@@ -2145,21 +2106,9 @@ class LakeTable:
         ff_from = int(bt.snap.get("ff_from", 0))
         if bt.version <= ff_from:
             return {"version": self.version, "commits_folded": 0}
-        # concatenate the folded commits' CDF manifests (commit order);
-        # one unknown change set poisons the window → null
-        bdir = _ref_meta(self.path, name)
-        changes: list[str] | None = []
-        for v in range(ff_from + 1, bt.version + 1):
-            p = os.path.join(bdir, f"version-{v:06d}.json")
-            if not os.path.exists(p):
-                changes = None
-                break
-            with open(p) as f:
-                ch = json.load(f).get("changes")
-            if ch is None:
-                changes = None
-                break
-            changes.extend(ch)
+        # the folded commits' CDF manifests; one unknown change set
+        # poisons the window → null
+        changes = _window_changes(_ref_meta(self.path, name), ff_from, bt.version)
         new = _copy.deepcopy(bt.snap)
         for k in ("branch", "branch_base", "ff_from"):
             new.pop(k, None)
@@ -2499,7 +2448,7 @@ class LakeTable:
             [self._zorder_column(resolved, zorder, zorder_bits)] if zorder else None
         )
         # broadcast-resolved rows are still bucket-aligned (the base side
-        # never shuffled); the degraded path re-clusters before writing.
+        # never shuffled); the unhinted plan re-clusters before writing.
         # A bin-pack rewrite (min_files) intentionally PAYS the
         # clustering shuffle: keeping the task-parallel layout would
         # re-emit one file per input task and coalesce nothing.
@@ -2757,10 +2706,10 @@ class LakeTable:
         — never a table scan. A Replicator.sync() per epoch then pays
         for the epoch's rows, not the table (the r3 scale hole: a
         10^-3-fraction window used to cost two full snapshot scans).
-        Net-change semantics come from an LWW resolve of
-        {v0 state} ∪ {window change rows} per key (base wins seq ties,
-        identical to read-time MoR resolution), so stale candidates and
-        duplicate retries drop out exactly as they do in read().
+        Net-change semantics come from the read-time overlay
+        (`lww_overlay`) of the window rows' LWW winners onto the v0
+        state (base wins seq ties), so stale candidates and duplicate
+        retries drop out exactly as they do in read().
 
         Fallback — any window commit without a manifest (pre-feature
         snapshot, external writer, changelog.enabled=false) falls back
@@ -2773,22 +2722,8 @@ class LakeTable:
         schema, aliases, keys = new.schema, new.aliases, self.key_cols
         if to_version <= from_version:
             return self._empty_changes(schema, keys)
-        rels: list[str] = []
-        recorded = True
-        meta_dir = _ref_meta(self.path, br)
-        for v in range(from_version + 1, to_version + 1):
-            p = os.path.join(meta_dir, f"version-{v:06d}.json")
-            if not os.path.exists(p):
-                recorded = False
-                break
-            with open(p) as f:
-                s = json.load(f)
-            ch = s.get("changes")
-            if ch is None:
-                recorded = False
-                break
-            rels.extend(ch)
-        if not recorded:
+        rels = _window_changes(_ref_meta(self.path, br), from_version, to_version)
+        if rels is None:
             return self._table_changes_diff(from_version, to_version)
         # v0 must still be retained — same contract as the diff path
         old = LakeTable.load(self.spark, self.path, version=from_version, branch=br)
@@ -2807,33 +2742,12 @@ class LakeTable:
         old_k = old_df.select(*keys, "__seq", "__deleted").join(
             w.select(*keys).distinct(), on=keys, how="left_semi"
         )
-        wsrc = w.select(*keys, *payload, "__seq", "__deleted").withColumn(
-            "__src", F.lit(0)
-        )
-        ptypes = {f.name: f.dataType for f in schema.fields}
-        osrc = old_k.select(
-            *keys,
-            *[F.lit(None).cast(ptypes[c]).alias(c) for c in payload],
-            "__seq",
-            "__deleted",
-        ).withColumn("__src", F.lit(1))
-        allr = wsrc.unionByName(osrc)
-        # LWW winner per key; __src=1 (v0 state) wins seq ties, mirroring
-        # base-wins-ties read resolution
-        mx = allr.groupBy(*keys).agg(F.max(F.struct("__seq", "__src")).alias("__m"))
-        win = (
-            allr.join(
-                mx.select(
-                    *keys,
-                    F.col("__m.__seq").alias("__seq"),
-                    F.col("__m.__src").alias("__src"),
-                ),
-                on=[*keys, "__seq", "__src"],
-                how="inner",
-            )
-            .dropDuplicates(keys)  # tied duplicate retries collapse
-            .filter(F.col("__src") == 0)  # v0-state winner ⇒ no net change
-        )
+        # the window's LWW winners that beat the v0 state (base wins seq
+        # ties, as in read()): a v0-state winner means no net change, and
+        # stale candidates and tied duplicate retries drop out
+        from wrangler_spark.lake.merge import lww_dedup, lww_overlay
+
+        _, win = lww_overlay(old_k, lww_dedup(w, keys, "__seq"), keys)
         om = old_k.select(
             *[F.col(k).alias(f"__o_{k}") for k in keys],
             F.col("__seq").alias("__o_seq"),

@@ -37,7 +37,6 @@ behavioral model.
 
 from __future__ import annotations
 
-import json
 import os
 from dataclasses import dataclass
 
@@ -48,50 +47,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql import types as T
 
-_META = "_meta"
+from wrangler_spark.lake.resolve import _arrow_type
+from wrangler_spark.lake.table import _current_version, _read_version, _ref_meta
 
 CHANGE_OP_FIELD = "_change_op"
 CHANGE_SEQ_FIELD = "_change_seq"
 CHANGE_VERSION_FIELD = "_commit_version"
-
-
-def _meta_path(path: str, v: int) -> str:
-    return os.path.join(path, _META, f"version-{v:06d}.json")
-
-
-def _load_snap(path: str, v: int) -> dict:
-    with open(_meta_path(path, v)) as f:
-        return json.load(f)
-
-
-def _current_version(path: str) -> int:
-    with open(os.path.join(path, _META, "VERSION")) as f:
-        return int(f.read().strip())
-
-
-def _arrow_type(dt: T.DataType):
-    import pyarrow as pa
-
-    m = {
-        T.StringType(): pa.string(),
-        T.LongType(): pa.int64(),
-        T.IntegerType(): pa.int32(),
-        T.ShortType(): pa.int16(),
-        T.ByteType(): pa.int8(),
-        T.DoubleType(): pa.float64(),
-        T.FloatType(): pa.float32(),
-        T.BooleanType(): pa.bool_(),
-        T.BinaryType(): pa.binary(),
-        T.DateType(): pa.date32(),
-        T.TimestampType(): pa.timestamp("us", tz="UTC"),
-    }
-    got = m.get(dt)
-    if got is None:
-        raise ValueError(
-            f"lake-changes: unsupported column type {dt.simpleString()} "
-            "(nested types are not streamable through this source yet)"
-        )
-    return got
 
 
 @dataclass
@@ -109,7 +70,11 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         ending_version: int | None = None,
     ):
         self.table_path = table_path
-        snap = _load_snap(table_path, _current_version(table_path))
+        # main's metadata: versions read raw (`_read_version`) — the
+        # fields this source uses (schema, aliases, change manifest)
+        # stay inline in a metadata diff, so hydration would be wasted
+        self.mdir = _ref_meta(table_path, None)
+        snap = _read_version(self.mdir, _current_version(self.mdir))
         self.schema_json = snap["schema"]
         self.aliases = snap.get("aliases", {})
         self.max_versions = (
@@ -122,7 +87,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         self._start = (
             int(starting_version)
             if starting_version is not None
-            else _current_version(table_path)
+            else _current_version(self.mdir)
         )
 
     # ---- offsets: plain dicts carrying the snapshot version ----
@@ -141,7 +106,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         run is uncapped; every later one is bounded. Announced offsets
         are monotonic — the cap can only defer progress, never rewind
         the stream's offset log."""
-        cur = _current_version(self.table_path)
+        cur = _current_version(self.mdir)
         if self.end_version is not None:
             cur = min(cur, self.end_version)
         if self.max_versions is None:
@@ -168,8 +133,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         self._pos = hi if self._pos is None else max(self._pos, hi)
         parts: list[_ChangeFilePartition] = []
         for v in range(int(start["version"]) + 1, int(end["version"]) + 1):
-            snap = _load_snap(self.table_path, v)
-            rels = snap.get("changes")
+            rels = _read_version(self.mdir, v).get("changes")
             if rels is None:
                 raise RuntimeError(
                     f"lake-changes: commit v{v} recorded no change manifest "
@@ -201,7 +165,7 @@ class LakeChangesStreamReader(DataSourceStreamReader):
         names_l = {n.lower(): n for n in tbl.column_names}
         fwd: dict[str, str] = {}  # former name -> name at partition.version
         try:
-            for cur, olds in _load_snap(self.table_path, partition.version).get(
+            for cur, olds in _read_version(self.mdir, partition.version).get(
                 "aliases", {}
             ).items():
                 for o in olds:
@@ -259,7 +223,8 @@ class LakeChangesDataSource(DataSource):
         path = self.options.get("path")
         if not path:
             raise ValueError("lake-changes: option 'path' is required")
-        snap = _load_snap(path, _current_version(path))
+        mdir = _ref_meta(path, None)
+        snap = _read_version(mdir, _current_version(mdir))
         schema = T.StructType.fromJson(snap["schema"])
         fields = [f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields]
         fields.append(f"`{CHANGE_OP_FIELD}` string")
