@@ -184,14 +184,15 @@ def main() -> None:
     sections.append((
         "MERGE INTO — degraded (key-count burst) path",
         "Past the broadcast bound the merge runs the same overlay plan "
-        "as the steady-state path without its hints or the winners' "
-        "checkpoint, so the planner picks each join, and the write "
-        "re-clusters by bucket (the union below has no Exchange of its "
-        "own), since the base side may have shuffled. Printed is AQE's "
-        "initial plan: the collapsed winners' size is unknown before "
-        "they run, so the base join plans as a SortMergeJoin on keys, "
-        "which AQE may turn into a broadcast join at run time once it "
-        "has measured a small side.",
+        "as the steady-state path without its hints: the collapsed "
+        "winners are still materialized once (the `Scan ExistingRDD` "
+        "checkpoint, which the change-file and bucket writes share), "
+        "the planner picks each join, and the write re-clusters by "
+        "bucket (the union below has no Exchange of its own), since the "
+        "base side may have shuffled. Printed is AQE's initial plan: "
+        "the checkpoint carries no size estimate, so the base join "
+        "plans as a SortMergeJoin on keys, which AQE may turn into a "
+        "broadcast join at run time once it has measured a small side.",
         sink2[0],
     ))
 

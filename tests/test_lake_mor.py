@@ -553,3 +553,264 @@ def test_mor_driver_path_matches_spark_path(mor_parity, case):
         assert arrow[1] == {} and arrow[0]["keys"] == 0
     else:
         assert arrow[1]
+
+
+# ------------------------------------------------ driver-side compaction
+#
+# compact() resolves and rewrites its target buckets on the driver in
+# Arrow while their files fit table._LOCAL_COMPACT_MAX_BYTES on disk;
+# patching the constant to 0 forces the Spark plan. Each step below
+# runs on one table per path, then compacts it.
+
+# (step, [(batch schema, rows, merge kwargs, mode)], table properties
+# set first, compact kwargs)
+COMPACT_STEPS = [
+    ("ties_and_tombstones", [
+        (_BASE + "content string", [
+            (10, "insert", "r1", "a.py", "c1", "py", "a0"),
+            (11, "insert", "r2", "b.py", "c1", "py", "b0"),
+            (12, "insert", "r3", "c.py", "c1", "py", "c0"),
+            (13, "insert", "r4", "d.py", "c1", "py", "d0"),
+        ], {}, "cow"),
+        (_BASE + "content string", [
+            (20, "update", "r1", "a.py", "c2", "py", "a-tie"),
+            (12, "update", "r3", "c.py", "c2", "py", "ties the base, loses"),
+            (40, "delete", "r2", "b.py", None, None, None),
+            (41, "delete", "r9", "never.py", None, None, None),
+        ], {}, "mor"),
+        # the same (key, seq) row again, in a second delta file
+        (_BASE + "content string", [
+            (20, "update", "r1", "a.py", "c2", "py", "a-tie"),
+            (39, "update", "r2", "b.py", "c9", "py", "stale after the tombstone"),
+            (42, "insert", "r5", "e.py", "c1", "py", "e0"),
+        ], {}, "mor"),
+    ], None, {}),
+    ("stale_after_compacted_tombstone", [
+        (_BASE + "content string", [
+            (38, "update", "r2", "b.py", "c9", "py", "still stale"),
+            (43, "update", "r4", "d.py", "c2", "py", "d1"),
+        ], {}, "mor"),
+    ], None, {}),
+    # stars lands as int in these files, then widens to long below
+    ("added_int_column", [
+        (_BASE + "content string, stars int", [
+            (50, "update", "r1", "a.py", "c3", "py", "a1", 1),
+            (51, "insert", "r6", "f.py", "c1", "py", "f0", 2),
+        ], {}, "mor"),
+    ], None, {}),
+    ("renamed_and_widened", [
+        (_BASE + "body string, stars long", [
+            (60, "update", "r6", "f.py", "c2", "py", "f1", 3_000_000_000),
+            (61, "insert", "r7", "g.py", "c1", "py", "g0", None),
+        ], {"renames": {"content": "body"}}, "mor"),
+    ], None, {}),
+    ("sort_and_split", [
+        (_BASE + "body string, stars long", [
+            (70 + i, "insert", f"r{i % 2}", f"p{i:02d}.py", "c1", "py", f"s{i}", i)
+            for i in range(11)
+        ], {}, "mor"),
+    ], {"write.sort.cols": "path", "write.max-records-per-file": "2"}, {}),
+    # no pending deltas: only the bucket-file count picks the targets
+    # (every bucket here: Spark's split above left more files than
+    # Arrow's in some buckets, so a higher count would pick different ones)
+    ("min_files", [], {"write.max-records-per-file": None}, {"min_files": 1}),
+]
+
+
+def _file_rows(t, rels):
+    import os
+
+    import pyarrow.parquet as pq
+
+    out = []
+    for rel in rels:
+        tbl = pq.read_table(os.path.join(t.path, rel))
+        out.append((tbl.schema.remove_metadata(), [tuple(r.values()) for r in tbl.to_pylist()]))
+    return out
+
+
+def _compact_state(t, res):
+    """What a compaction left: its result (less the version), the
+    schema and rows of each file of the rewritten or empty buckets,
+    read() and _resolved() rows, and the pending deltas."""
+    rewritten = {
+        b: sorted(_file_rows(t, rels), key=lambda f: [_row_key(r) for r in f[1]])
+        for b, rels in t.snap["files"].items()
+        if any(f"v{res['version']:06d}" in r for r in rels) or not rels
+    }
+    return (
+        {k: v for k, v in res.items() if k != "version"},
+        rewritten,
+        sorted((tuple(r) for r in t.read().collect()), key=_row_key),
+        sorted((tuple(r) for r in t._resolved()[0].collect()), key=_row_key),
+        dict(t.snap.get("deltas", {})),
+    )
+
+
+@pytest.fixture(scope="module")
+def compact_parity(spark, tmp_path_factory):
+    """Every compaction step through both paths: {step: {path: state}},
+    plus the emptied-bucket step, which compacts a bucket whose only
+    file holds no rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from wrangler_spark.lake import resolve
+    from wrangler_spark.lake import table as table_mod
+
+    root = tmp_path_factory.mktemp("compact_parity")
+    out = {step[0]: {} for step in COMPACT_STEPS}
+    out["emptied_bucket"] = {}
+    for path, limit in (("arrow", table_mod._LOCAL_COMPACT_MAX_BYTES), ("spark", 0)):
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(table_mod, "_LOCAL_COMPACT_MAX_BYTES", limit)
+            t = LakeTable.create(
+                spark, str(root / path), repo_files_schema(), ["repo", "path"],
+                num_buckets=4,
+            )
+            epoch = 0
+            for step, batches, props, kw in COMPACT_STEPS:
+                if props:
+                    t.set_properties(props)
+                for cols, rows, merge_kw, mode in batches:
+                    t.merge(spark.createDataFrame(rows, cols), epoch=epoch, mode=mode, **merge_kw)
+                    epoch += 1
+                res = t.compact(**kw)
+                out[step][path] = _compact_state(t, res)
+            # a truncated table, then a bucket whose only (delta) file is empty
+            t.truncate()
+            schema = resolve.resolve_files([], [], t.schema, t.aliases, t.key_cols).schema
+            rel = os.path.join("data", "empty-delta", "__b=1", "part-0.parquet")
+            os.makedirs(os.path.dirname(os.path.join(t.path, rel)))
+            pq.write_table(schema.empty_table(), os.path.join(t.path, rel))
+            t.commit({}, new_delta_files={"1": [rel]}, change_files=[])
+            res = t.compact()
+            out["emptied_bucket"][path] = _compact_state(t, res)
+    return out
+
+
+@pytest.mark.parametrize("step", [s[0] for s in COMPACT_STEPS] + ["emptied_bucket"])
+def test_compact_driver_path_matches_spark_path(compact_parity, step):
+    arrow, spark_ = compact_parity[step]["arrow"], compact_parity[step]["spark"]
+    assert arrow[0]["driver"] is True and spark_[0]["driver"] is False
+    assert arrow[0]["compacted_buckets"] == spark_[0]["compacted_buckets"] > 0
+    # read() rows, and _resolved() rows with __seq/__deleted
+    assert arrow[2] == spark_[2]
+    assert arrow[3] == spark_[3]
+    assert arrow[4] == spark_[4] == {}
+    # same file schemas, same rows per bucket
+    def by_bucket(files):
+        return {
+            b: ({s for s, _r in fs}, sorted((r for _s, rs in fs for r in rs), key=_row_key))
+            for b, fs in files.items()
+        }
+
+    assert by_bucket(arrow[1]) == by_bucket(spark_[1])
+    if step == "sort_and_split":
+        # both sort each file by path and split it every 2 rows; Spark
+        # splits each write task's share of a bucket, Arrow the bucket
+        # (so its files are fewer or as many)
+        for files in (arrow[1], spark_[1]):
+            for _s, rows in (f for fs in files.values() for f in fs):
+                assert 0 < len(rows) <= 2 and [r[1] for r in rows] == sorted(r[1] for r in rows)
+        for b, fs in arrow[1].items():
+            assert len(fs) == (sum(len(r) for _s, r in fs) + 1) // 2 <= len(spark_[1][b])
+        assert max(len(fs) for fs in arrow[1].values()) > 1
+    if step == "min_files":
+        # coalesced to one file per bucket on both paths
+        assert arrow[1] == spark_[1]
+        assert all(len(fs) == 1 for fs in arrow[1].values()) and len(arrow[1]) > 1
+    if step == "emptied_bucket":
+        # the truncate emptied every bucket; the compaction kept "1" empty
+        assert arrow[1] == spark_[1] and arrow[1]["1"] == []
+        assert arrow[2] == []
+    if step == "stale_after_compacted_tombstone":
+        # the tombstones survive compaction and keep beating stale updates
+        assert ("r2", "b.py", 40, True) in {(r[0], r[1], r[-2], r[-1]) for r in arrow[3]}
+        assert not any(r[:2] == ("r2", "b.py") for r in arrow[2])
+    if step == "ties_and_tombstones":
+        contents = {r[:2]: r[4] for r in arrow[2]}
+        assert contents[("r1", "a.py")] == "a-tie" and contents[("r3", "c.py")] == "c0"
+        assert sum(r[:2] == ("r1", "a.py") for r in arrow[3]) == 1
+
+
+def test_driver_compaction_runs_no_spark_job(spark, mk_table, count_jobs):
+    t = mk_table("jobs")
+    _apply(t, spark, "mor")
+    want = snap_rows(t)
+    res, jobs = count_jobs(t.compact)
+    assert (res["driver"], jobs) == (True, 0)
+    assert res["compacted_buckets"] > 0 and t.delta_files() == []
+    assert snap_rows(t) == want
+
+
+def test_nested_schema_and_zorder_compact_on_spark(spark, tmp_path):
+    from pyspark.sql import types as T
+
+    nested = T.StructType([
+        T.StructField("repo", T.StringType()), T.StructField("path", T.StringType()),
+        T.StructField("tags", T.ArrayType(T.StringType())),
+    ])
+    t = LakeTable.create(spark, str(tmp_path / "nested"), nested, ["repo", "path"], num_buckets=4)
+    batch = "seq long, op string, repo string, path string, tags array<string>"
+    t.merge(spark.createDataFrame([(1, "insert", "r1", "a.py", ["x"])], batch), epoch=0, mode="mor")
+    t.merge(spark.createDataFrame([(2, "update", "r1", "a.py", ["y", "z"])], batch), epoch=1, mode="mor")
+    res = t.compact()
+    assert res["driver"] is False and res["compacted_buckets"] == 1
+    assert [(r["path"], r["tags"]) for r in t.read().collect()] == [("a.py", ["y", "z"])]
+
+    z = LakeTable.create(
+        spark, str(tmp_path / "z"), repo_files_schema(), ["repo", "path"], num_buckets=4
+    )
+    _apply(z, spark, "mor")
+    z.merge(
+        ch(spark, [(50, "update", "r1", "a.py", "c5", "py", "a5")]).withColumn("stars", F.lit(3)),
+        epoch=3, mode="mor",
+    )
+    want = snap_rows(z)
+    res = z.compact(zorder=["stars"])
+    assert res["driver"] is False and z.delta_files() == []
+    assert snap_rows(z) == want
+
+
+def test_lake_files_are_zstd_whatever_the_session_codec(spark, mk_table, monkeypatch):
+    """Base, delta, change and compaction files (both compaction paths)
+    are zstd while the session's parquet codec says snappy."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from wrangler_spark.lake import table as table_mod
+
+    def codecs(t, rels):
+        assert rels
+        out = set()
+        for rel in rels:
+            md = pq.ParquetFile(os.path.join(t.path, rel)).metadata
+            for g in range(md.num_row_groups):
+                for c in range(md.num_columns):
+                    out.add(md.row_group(g).column(c).compression)
+        return out
+
+    key = "spark.sql.parquet.compression.codec"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "snappy")
+    try:
+        seen = {}
+        for name, limit in (("arrow", table_mod._LOCAL_COMPACT_MAX_BYTES), ("spark", 0)):
+            monkeypatch.setattr(table_mod, "_LOCAL_COMPACT_MAX_BYTES", limit)
+            t = mk_table(f"codec_{name}")
+            t.merge(ch(spark, EPOCHS[0]), epoch=0, mode="cow")
+            seen["cow base"] = codecs(t, [r for rs in t.snap["files"].values() for r in rs])
+            seen["cow change"] = codecs(t, t.snap["changes"])
+            t.merge(ch(spark, EPOCHS[1]), epoch=1, mode="mor")
+            seen["driver delta"] = codecs(t, t.delta_rels())
+            res = t.compact()
+            assert res["driver"] is (name == "arrow")
+            seen[f"{name} compaction"] = codecs(
+                t, [r for rs in t.snap["files"].values() for r in rs if "v000003" in r]
+            )
+    finally:
+        spark.conf.set(key, before)
+    assert seen == {k: {"ZSTD"} for k in seen} and len(seen) == 5

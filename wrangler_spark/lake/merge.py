@@ -103,15 +103,16 @@ def lww_overlay(
     of the winners, and the winners only the keys the base beat, so no
     payload joins a payload.
 
-    `broadcast`, for winners a caller's size gate bounds, materializes
-    the collapsed winners once (three branches of the plan read them,
-    and exchange reuse does not cover their differing projections) and
-    hints both winner-sized sides, which keeps the base side unshuffled
-    and so bucket-aligned. It changes no row."""
+    The collapsed winners are materialized once (`localCheckpoint`):
+    three branches of the plan read them, and exchange reuse does not
+    cover their differing projections, so every query over the result
+    (a merge's change-file and bucket writes) would otherwise recompute
+    the winners' scan, join-back and collapse. `broadcast`, for winners
+    a caller's size gate bounds, only hints both winner-sized sides,
+    which keeps the base side unshuffled and so bucket-aligned. It
+    changes no row."""
     hint = F.broadcast if broadcast else (lambda df: df)
-    winners = winners.dropDuplicates(key_cols)
-    if broadcast:
-        winners = winners.localCheckpoint(eager=True)
+    winners = winners.dropDuplicates(key_cols).localCheckpoint(eager=True)
     wk = winners.select(
         *[F.col(k).alias(f"__d_{k}") for k in key_cols], F.col("__seq").alias("__d_seq")
     )
@@ -537,10 +538,10 @@ def merge_into(
     base_aligned = base_aligned.withColumn("__b", table.bucket_expr(base_aligned))
 
     # seq-guarded merge (`WHEN MATCHED AND s.seq > t.seq`, lww_overlay):
-    # under the key bound the collapsed winners are materialized once
-    # for the change-file and bucket writes and their sides broadcast,
-    # so the base payload never shuffles and stays bucket-aligned; past
-    # it (a key-count burst) the same plan runs unhinted and the write
+    # the collapsed winners are materialized once for the change-file
+    # and bucket writes; under the key bound their sides broadcast, so
+    # the base payload never shuffles and stays bucket-aligned; past it
+    # (a key-count burst) the same plan runs unhinted and the write
     # re-clusters by bucket (without it, every write task would span
     # many buckets and emit tasks × buckets small files per version).
     base_keep, changed = lww_overlay(

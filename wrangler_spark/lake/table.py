@@ -45,10 +45,18 @@ environment, so this module implements the same contract natively:
   epoch costs one Spark job instead of a shuffle per stage; larger
   batches keep the Spark plan.
   `compact()` folds pending deltas back into the base buckets,
-  bounding both read amplification and delta file count. This is the
-  shape that holds at 10^10 events: sparse epochs (0.1% key touch
-  spread over every bucket) would force copy-on-write to rewrite the
-  whole table; merge-on-read writes 0.1% and compacts on a cadence.
+  bounding both read amplification and delta file count. While the
+  target buckets' files take at most `_LOCAL_COMPACT_MAX_BYTES` on
+  disk it runs on the driver with zero Spark jobs: each bucket
+  resolves in Arrow on its own thread (`lake.resolve.resolve_files`)
+  and pyarrow writes it back; larger rewrites and z-order keep the
+  Spark plan. This is the shape that holds at 10^10 events: sparse
+  epochs (0.1% key touch spread over every bucket) would force
+  copy-on-write to rewrite the whole table; merge-on-read writes 0.1%
+  and compacts on a cadence.
+- codec: every data file (base, delta, change and compaction files,
+  from Spark and from pyarrow) is zstd (`_CODEC`), whatever the
+  session's parquet codec, as Iceberg writes by default.
 - file-level stats + data skipping (Iceberg manifest stats): every
   commit reads the new parquet files' FOOTERS (serially on the driver
   for small commits, as a Spark job over the file list for large ones —
@@ -383,13 +391,45 @@ def _refresh_stats(path: str, snap: dict, spark: SparkSession | None = None) -> 
 
 _SCAN_OPS = ("=", "<", "<=", ">", ">=", "in")
 
-# `spark.sql.parquet.compression.codec` → pyarrow codec for driver-side
-# bucket writes (pyarrow's lz4 writes LZ4_RAW, which Spark reads for
-# both of its lz4 codecs; lzo has no pyarrow writer)
-_ARROW_CODECS = {
-    "none": "none", "uncompressed": "none", "snappy": "snappy", "gzip": "gzip",
-    "brotli": "brotli", "lz4": "lz4", "lz4_raw": "lz4", "zstd": "zstd",
-}
+# Every lake data file (base, delta, change and compaction files, from
+# Spark and from pyarrow) is written with this codec, whatever the
+# session's `spark.sql.parquet.compression.codec` says. Each compaction
+# rewrites its buckets whole, so the codec sets most of the bytes a
+# merge-on-read table writes: a compacted 49.6k-row table took 4.40 MB
+# as zstd against 7.72 MB as snappy (pyarrow). Iceberg's default too.
+_CODEC = "zstd"
+
+# `compact()` resolves and rewrites its target buckets on the driver, in
+# Arrow and with zero Spark jobs, while their base and pending delta
+# files take at most this many bytes on disk; larger rewrites keep the
+# Spark plan. Resolved Arrow tables measured 3.7x their zstd files
+# (2.0x snappy): 15.7 MB of Arrow for 49.6k rows, so the bound holds
+# about 120 MB of Arrow on the driver.
+_LOCAL_COMPACT_MAX_BYTES = 32 << 20
+
+
+def _disk_bytes(files: list[str]) -> int:
+    """On-disk bytes of `files` (missing ones count 0): zero Spark jobs."""
+    total = 0
+    for f_ in files:
+        try:
+            total += os.path.getsize(f_)
+        except OSError:
+            pass
+    return total
+
+
+def _thread_map(fn, items: list) -> list:
+    """`fn` over `items` on min(len(items), nproc) threads, in order.
+    pyarrow's parquet reads, sorts and writes release the GIL, so
+    per-bucket Arrow work runs in parallel."""
+    if len(items) <= 1:
+        return [fn(x) for x in items]
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(min(len(items), len(os.sched_getaffinity(0)))) as ex:
+        return list(ex.map(fn, items))
+
 
 # numeric widening lattice for schema evolution (set-type widen →
 # ALTER TABLE ... TYPE; reference column/SetType.java:126-176)
@@ -850,13 +890,7 @@ class LakeTable:
     def delta_bytes(self, buckets: list[int] | None = None) -> int:
         """On-disk bytes of pending delta files — a zero-job heuristic
         for the read path's broadcast decision and compaction cadence."""
-        total = 0
-        for f_ in self.delta_files(buckets):
-            try:
-                total += os.path.getsize(f_)
-            except OSError:
-                pass
-        return total
+        return _disk_bytes(self.delta_files(buckets))
 
     def bucket_expr(self, df: DataFrame) -> F.Column:
         return F.pmod(
@@ -1375,11 +1409,11 @@ class LakeTable:
         t.seq`), and tied delta copies collapse to one row — two delta
         files can carry the same (key, seq) row, e.g. a mor Replicator
         retry after a crash between merge and watermark stamp replays an
-        overlapping window under a new fencing epoch. While the pending
-        delta files take at most `_MOR_BROADCAST_MAX_BYTES` on disk, the
-        winners are materialized once and broadcast, so the base payload
-        is scanned once and never shuffles; past it (compaction far
-        behind) the same plan runs unhinted.
+        overlapping window under a new fencing epoch. The winners are
+        materialized once; while the pending delta files take at most
+        `_MOR_BROADCAST_MAX_BYTES` on disk they are broadcast, so the
+        base payload is scanned once and never shuffles; past it
+        (compaction far behind) the same plan runs unhinted.
         """
         if base_files is not None:
             files = base_files  # scan path: stats-pruned file list
@@ -1392,8 +1426,8 @@ class LakeTable:
         from wrangler_spark.lake.merge import lww_dedup, lww_overlay
 
         delta = self._read_files(dfiles, schema=schema, aliases=aliases)
-        # the broadcast plan materializes the delta winners once; without
-        # it, pre-compaction resolved reads recomputed the delta scan +
+        # lww_overlay materializes the delta winners once; without it,
+        # pre-compaction resolved reads recomputed the delta scan +
         # max-seq agg up to 4× (BENCH_r04 mor_sparse_epoch: 4.76 s vs
         # 0.51 s cow on 683K rows)
         small = self.delta_bytes(buckets) <= _MOR_BROADCAST_MAX_BYTES
@@ -1412,9 +1446,11 @@ class LakeTable:
         """Write df (which must carry an int `__b` bucket column) under
         data/v<version>/, one directory per bucket; returns bucket→relpaths.
         `df` is a Spark DataFrame, or a driver-side `pyarrow.Table` (a
-        merge-on-read batch the merge collected): pyarrow then writes
-        one file per bucket, or per `write.max-records-per-file` rows,
-        into the same layout (`_write_arrow_buckets`).
+        merge-on-read batch the merge collected, or the buckets
+        `compact()` resolved in Arrow): pyarrow then writes one file per
+        bucket, or per `write.max-records-per-file` rows, into the same
+        layout (`_write_arrow_buckets`). Both writers compress with
+        `_CODEC` (zstd), not the session's parquet codec.
 
         pre_partitioned=True skips the clustering shuffle: the caller
         guarantees rows are already reasonably bucket-aligned (the merge
@@ -1453,7 +1489,7 @@ class LakeTable:
             out_df = out_df.sortWithinPartitions("__b", *sort_override)
         elif sort_cols:
             out_df = out_df.sortWithinPartitions("__b", *sort_cols)
-        writer = out_df.write.mode("overwrite").partitionBy("__b")
+        writer = out_df.write.mode("overwrite").partitionBy("__b").option("compression", _CODEC)
         mrpf = props.get("write.max-records-per-file")
         if mrpf:
             writer = writer.option("maxRecordsPerFile", int(mrpf))
@@ -1478,19 +1514,16 @@ class LakeTable:
         """pyarrow twin of the Spark bucket write for a driver-side
         table: rows sorted by `__b` then `sort_cols` (ascending, nulls
         first, as `sortWithinPartitions`), `__b=<k>/` directories, `__b`
-        left out of the files, the collected schema's nullability (as
-        Spark's writer keeps it), the session's parquet codec and no
-        Arrow schema blob in the footer. An empty table writes
-        nothing."""
+        left out of the files, the table's own nullability (as Spark's
+        writer keeps its input's), zstd (`_CODEC`, as in Spark's writes)
+        and no Arrow schema blob in the footer. The per-bucket slices
+        are written on a thread pool (`_thread_map`). An empty table
+        writes nothing."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         if tbl.num_rows == 0:
             return {}
-        codec = self.spark.conf.get("spark.sql.parquet.compression.codec", "snappy").lower()
-        pa_codec = _ARROW_CODECS.get(codec)
-        if pa_codec is None:
-            raise ValueError(f"parquet codec {codec!r} has no pyarrow writer")
         mrpf = int(self.snap.get("properties", {}).get("write.max-records-per-file") or 0)
         names_l = {n.lower(): n for n in tbl.column_names}
         order = pc.sort_indices(
@@ -1502,6 +1535,7 @@ class LakeTable:
         buckets = tbl.column("__b").combine_chunks()
         data = tbl.drop_columns(["__b"])
         out: dict[str, list[str]] = {}
+        parts = []  # (relpath, first row, row count)
         start = 0
         for run in pc.value_counts(buckets):
             b, n = run["values"].as_py(), run["counts"].as_py()
@@ -1512,17 +1546,20 @@ class LakeTable:
             for off in range(start, start + n, step):
                 rel = os.path.join(
                     bucket_rel,
-                    f"part-{len(rels):05d}-{uuid.uuid4()}.c000.{codec}.parquet",
+                    f"part-{len(rels):05d}-{uuid.uuid4()}.c000.{_CODEC}.parquet",
                 )
-                part = data.slice(off, min(step, start + n - off))
-                pq.write_table(
-                    part,
-                    os.path.join(self.path, rel),
-                    compression=pa_codec,
-                    store_schema=False,
-                )
+                parts.append((rel, off, min(step, start + n - off)))
                 rels.append(rel)
             start += n
+
+        def write(part):
+            rel, off, n = part
+            pq.write_table(
+                data.slice(off, n), os.path.join(self.path, rel),
+                compression=_CODEC, store_schema=False,
+            )
+
+        _thread_map(write, parts)
         return out
 
     def write_change_files(self, df: DataFrame, version: int) -> list[str]:
@@ -1535,7 +1572,7 @@ class LakeTable:
             _DATA, f"v{version:06d}-cdf-{uuid.uuid4().hex[:8]}"
         )
         staging = os.path.join(self.path, staging_rel)
-        df.drop("__b").write.mode("overwrite").parquet(staging)
+        df.drop("__b").write.mode("overwrite").option("compression", _CODEC).parquet(staging)
         # prune zero-row part files (Spark writes one even for an empty
         # post-image): a fully-stale epoch then returns [] — a KNOWN
         # empty change set, so the merge's fully-stale fast path can
@@ -2399,12 +2436,24 @@ class LakeTable:
         (Iceberg `rewrite_data_files` over partitions with delete
         files). Only buckets that actually hold deltas are rewritten;
         the resolved view is byte-identical before and after — compaction
-        changes cost, never answers.
+        changes cost, never answers. Tombstones stay in the base, so a
+        later stale update still loses.
 
         Run this on a cadence (the Replayer's `compact_every` does it
         every K epochs): it bounds the delta volume the broadcast
         read-resolution carries AND the per-bucket small-file count
         (each MoR epoch adds one delta file per touched bucket).
+
+        Each bucket is a self-contained LWW domain, so while the target
+        buckets' base and delta files take at most
+        `_LOCAL_COMPACT_MAX_BYTES` on disk (a zero-job size sum) and
+        every column has an Arrow mapping, the rewrite runs on the
+        driver with zero Spark jobs: `resolve.resolve_files` resolves
+        one bucket per thread, and `write_buckets` writes the rows with
+        pyarrow. Larger rewrites, nested columns and `zorder` run the
+        Spark plan (`_resolved` and a Spark bucket write); both honor
+        `write.sort.cols` and `write.max-records-per-file`, commit an
+        emptied bucket as [], and return `driver` saying which ran.
 
         `zorder=[cols]` additionally rewrites the targeted buckets (ALL
         requested buckets then, delta-bearing or not — it is a layout
@@ -2421,6 +2470,8 @@ class LakeTable:
         workload), imported layouts, or rescale leftovers, and past
         some count the per-file open/footer cost dominates the scan —
         the rewrite coalesces them under the CURRENT properties."""
+        from wrangler_spark.lake.resolve import arrow_supported
+
         pending = self.snap.get("deltas", {})
         if zorder:
             targets = sorted(
@@ -2441,28 +2492,54 @@ class LakeTable:
                 targets = sorted(set(targets) | set(frag))
         if not targets:
             return {"compacted_buckets": 0, "version": self.version}
-        resolved, aligned = self._resolved(buckets=targets)
-        resolved = resolved.withColumn("__b", self.bucket_expr(resolved))
         new_version = self.version + 1
-        sort_override = (
-            [self._zorder_column(resolved, zorder, zorder_bits)] if zorder else None
+        driver = (
+            not zorder
+            and arrow_supported(self.schema)
+            and _disk_bytes(self.bucket_files(targets) + self.delta_files(targets))
+            <= _LOCAL_COMPACT_MAX_BYTES
         )
-        # broadcast-resolved rows are still bucket-aligned (the base side
-        # never shuffled); the unhinted plan re-clusters before writing.
-        # A bin-pack rewrite (min_files) intentionally PAYS the
-        # clustering shuffle: keeping the task-parallel layout would
-        # re-emit one file per input task and coalesce nothing.
-        bucket_files = self.write_buckets(
-            resolved,
-            new_version,
-            pre_partitioned=aligned and min_files is None,
-            sort_override=sort_override,
-        )
+        if driver:
+            bucket_files = self.write_buckets(self._resolved_arrow(targets), new_version)
+        else:
+            resolved, aligned = self._resolved(buckets=targets)
+            resolved = resolved.withColumn("__b", self.bucket_expr(resolved))
+            sort_override = (
+                [self._zorder_column(resolved, zorder, zorder_bits)] if zorder else None
+            )
+            # broadcast-resolved rows are still bucket-aligned (the base
+            # side never shuffled); the unhinted plan re-clusters before
+            # writing. A bin-pack rewrite (min_files) intentionally PAYS
+            # the clustering shuffle: keeping the task-parallel layout
+            # would re-emit one file per input task and coalesce nothing.
+            bucket_files = self.write_buckets(
+                resolved,
+                new_version,
+                pre_partitioned=aligned and min_files is None,
+                sort_override=sort_override,
+            )
         for b in targets:
             bucket_files.setdefault(str(b), [])
         self.commit(bucket_files, clear_delta_buckets=targets, change_files=[],
                     operation="compact")
-        return {"compacted_buckets": len(targets), "version": self.version}
+        return {"compacted_buckets": len(targets), "version": self.version, "driver": driver}
+
+    def _resolved_arrow(self, buckets: list[int]):
+        """`_resolved` of `buckets` as one `pyarrow.Table` with the
+        bucket as an int `__b` column: each bucket's base and delta files
+        resolve on their own thread (`resolve.resolve_files`)."""
+        import pyarrow as pa
+
+        from wrangler_spark.lake.resolve import resolve_files
+
+        def one(b: int):
+            tbl = resolve_files(
+                self.bucket_files([b]), self.delta_files([b]), self.schema,
+                self.aliases, self.key_cols,
+            )
+            return tbl.append_column("__b", pa.repeat(pa.scalar(b, pa.int32()), tbl.num_rows))
+
+        return pa.concat_tables(_thread_map(one, buckets))
 
     def maintain(
         self,
